@@ -89,6 +89,8 @@ def test_read_points_txt_parses_generated_points(spark, tmp_path):
 
 
 def _last_plan(spark) -> str:
+    # the SQL status store is filled from the listener bus, asynchronously
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     executions = spark._jsparkSession.sharedState().statusStore().executionsList()
     return executions.apply(executions.size() - 1).physicalPlanDescription()
 

@@ -44,17 +44,14 @@ class QueryMixSpec:
 
 WORKLOADS = {
     # Fixed per-iteration cost: many cheap iterations over a small input,
-    # which kmeans_arrow runs as one task.
-    "kmeans_iter": KMeansSpec(warm_pass_s=5.0, n=20_000, dim=2, k=16, iters=5),
-    # Per-record cost: a few iterations over an input past kmeans_arrow's
-    # one-task size limit (LOCAL_BYTES below), so it runs treeAggregate.
-    # Runnable like the others but not listed in BENCHMARK.json: the time
-    # budget for a full set of benchmark runs holds two workloads, not three.
-    "kmeans_scan": KMeansSpec(warm_pass_s=12.0, n=120_000, dim=4, k=8, iters=3),
+    # which kmeans_arrow runs as one task. At 15 iterations the per-iteration
+    # share (job launch, re-planning, gather) is about two thirds of a pass,
+    # measured as the slope of fit time over ITERS; at 5 it was under half.
+    "kmeans_iter": KMeansSpec(warm_pass_s=7.0, n=20_000, dim=2, k=16, iters=15),
     # Operator build, Catalyst, parquet scan and memo layers, one query per
     # family. The rest of the families (graph triangles, DBSCAN, geo kNN,
-    # dedup banding, kNN labels, ...) do not fit: a run has ~40 s for set-up,
-    # the cold pass, a warm pass and the oracle checks. At this size the
+    # dedup banding, kNN labels, ...) do not fit: a run has ~50 s for set-up,
+    # the cold pass, three warm passes and the oracle checks. At this size the
     # queries cost per-job overhead, not per-row work, so scale stays small.
     "query_mix": QueryMixSpec(
         warm_pass_s=6.0,
@@ -72,21 +69,14 @@ WORKLOADS = {
     ),
 }
 
-# kmeans_arrow's one-task limit on the plan-size estimate of its input
-# (SPARK_GRAFT_KMEANS_LOCAL_BYTES, 64 MiB by default). A text scan is
-# estimated at ~0.57x its file size, so the default needs ~115 MB of text,
-# more than a run can parse in its time; the benchmark lowers the limit to
-# 512 KiB so kmeans_scan (~4.7 MB of text, estimated ~2.7 MB) is past it and
-# kmeans_iter (~0.36 MB, estimated ~0.2 MB) stays under it.
-LOCAL_BYTES = 512 * 1024
-
 
 def warm_passes(workload: str, seconds: float) -> int:
     """How many warm passes fill ``seconds`` at the workload's nominal pass
-    length. The count depends on ``seconds`` only, never on a measured time:
-    the JVM keeps compiling through the first minute, each pass is faster
-    than the last, so runs that stopped after different counts would differ
-    by that alone."""
+    length; at the benchmark's run length, three, so the median can reject
+    one slow pass. The count depends on ``seconds`` only, never on a measured
+    time: the JVM keeps compiling through the first minute, each pass is
+    faster than the last, so runs that stopped after different counts would
+    differ by that alone."""
     return max(1, int(seconds // WORKLOADS[workload].warm_pass_s))
 
 
