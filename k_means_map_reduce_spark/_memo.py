@@ -1,31 +1,50 @@
-"""Bounded per-session memoization for persisted DataFrames/artifacts.
+"""Per-session memoization of the artifacts several queries share.
 
-Several operators persist a derived table that multiple queries (or both
-sides of a self-join) reuse — basket tables, graph edge lists, ANN indexes,
-BM25 per-doc stats. Module-level dicts memoize them, but round-3 review
-flagged two hazards with the ad-hoc versions:
+Many operators derive a table from one scale-factor directory that more than
+one query (or both sides of a self-join) reads: basket tables, graph edge
+lists, ANN indexes, BM25 per-doc stats. Like a MapReduce job's partition
+files, each is built once and read by every consumer. All of them go through
+one fetch-or-build path, with two entry points:
 
-- keying by ``id(spark)`` can alias a NEW session to a stopped one whose
-  SparkSession object was garbage-collected (CPython reuses addresses),
-  handing back persisted DataFrames bound to a dead context;
-- unbounded growth: a long-lived session invoking queries across many
-  sf_dirs accumulates pinned executor storage with no eviction.
+- ``@memoized("module.artifact")`` on a whole-function builder
+  ``f(spark, sf_dir, *params)``;
+- ``memo_persist("module.artifact", spark, sf_dir, build)`` for a frame built
+  inline and persisted on its first build.
 
-``SessionMemo`` fixes both: keys lead with
-``spark.sparkContext.applicationId`` (stable, never reused within a
-cluster), entries are LRU-evicted beyond ``maxsize``, and eviction
+Both address a ``SessionMemo`` by name and create it on first use, so every
+artifact kind has its own memo and holds one entry per ``(sf_dir, *params)``.
+The key is ``(applicationId, abspath(sf_dir), *params)``:
+
+- ``applicationId`` is stable and never reused within a cluster; keying by
+  ``id(spark)`` could alias a new session to a stopped one whose object was
+  garbage-collected (CPython reuses addresses) and hand back DataFrames bound
+  to a dead context;
+- ``abspath`` lets a relative and an absolute spelling of one directory share
+  one entry.
+
+On a miss the builder runs and its result is stored through
+``SessionMemo.put``; a builder that raises stores nothing, and one that
+returns ``None`` is not remembered. The builder picks the storage
+(``persist()``, ``localCheckpoint``, or a plain Python value); the memo only
+remembers the result. Entries are LRU-evicted beyond ``maxsize``, and eviction
 unpersists every DataFrame found in the evicted value (walking tuples and
-lists). ``clear_all_memos()`` is the explicit release hook.
+lists), so a long-lived session visiting many sf_dirs does not accumulate
+pinned executor storage. ``clear_all_memos()`` is the explicit release hook.
 """
 
 from __future__ import annotations
 
+import functools
+import inspect
+import os
 from collections import OrderedDict
+from collections.abc import Callable
 from typing import Any
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 _ALL_MEMOS: list["SessionMemo"] = []
+_NAMED: dict[str, "SessionMemo"] = {}
 
 
 def _unpersist_value(value: Any) -> None:
@@ -86,17 +105,56 @@ def clear_all_memos() -> None:
         memo.clear()
 
 
-def memo_persist(memo: "SessionMemo", spark: SparkSession, key: Any, build):
-    """Fetch-or-build a persisted single-DataFrame memo entry.
+def named_memo(name: str) -> SessionMemo:
+    """The memo for artifact kind ``name``, created on first use."""
+    memo = _NAMED.get(name)
+    if memo is None:
+        memo = _NAMED[name] = SessionMemo(name)
+    return memo
 
-    The standard fix for lesson 27/30's pair of hazards: a derived frame
-    consumed by several plan branches must be persisted (or every consumer
-    re-runs its subtree), and that persist must be memoized per
-    (applicationId, key) (or every warm bench rep pins a fresh block).
-    """
-    hit = memo.get(spark, key)
+
+def _fetch_or_build(
+    name: str, spark: SparkSession, sf_dir: str, params: tuple, build: Callable[[], Any]
+) -> Any:
+    memo = named_memo(name)
+    parts = (os.path.abspath(sf_dir), *params)
+    hit = memo.get(spark, *parts)
     if hit is not None:
-        return hit[0]
-    df = build().persist()
-    memo.put(spark, key, (df,))
-    return df
+        return hit
+    return memo.put(spark, *parts, build())
+
+
+def memoized(name: str):
+    """Memoize a builder ``f(spark, sf_dir, *params)`` under ``name``.
+
+    The params are bound to the signature with defaults applied, so
+    ``f(spark, d, k=4)`` and ``f(spark, d, 4)`` share one entry.
+    """
+
+    def decorate(fn):
+        sig = inspect.signature(fn)
+
+        @functools.wraps(fn)
+        def fetch(spark: SparkSession, sf_dir: str, *args: Any, **kwargs: Any) -> Any:
+            bound = sig.bind(spark, sf_dir, *args, **kwargs)
+            bound.apply_defaults()
+            params = (*bound.args[2:], *bound.kwargs.items())
+            return _fetch_or_build(
+                name, spark, sf_dir, params, lambda: fn(*bound.args, **bound.kwargs)
+            )
+
+        return fetch
+
+    return decorate
+
+
+def memo_persist(
+    name: str, spark: SparkSession, sf_dir: str, build: Callable[[], DataFrame]
+) -> DataFrame:
+    """Fetch-or-build a persisted frame that several plan branches consume.
+
+    Such a frame must be persisted, or every consumer re-runs its subtree,
+    and the persist must be memoized, or every warm invocation pins a fresh
+    block.
+    """
+    return _fetch_or_build(name, spark, sf_dir, (), lambda: build().persist())

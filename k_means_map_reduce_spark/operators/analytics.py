@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .._memo import SessionMemo, memo_persist
+from .._memo import memo_persist, memoized
 from ..registry import query
 from ..sources import load_table
 from ._util import dsum, sql_dsum
@@ -336,54 +336,38 @@ def events_winsorized_value_stats(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-_BASKETS_CACHE = SessionMemo("analytics.baskets")
-# the support-pruned co-purchase pair counts feed BOTH market_basket_pairs
-# (lift) and reco_item_item_cosine (ranked neighbors); memoize the persisted
-# rollup so the basket self-join runs once per (session, sf_dir)
-_PAIR_COUNTS_CACHE = SessionMemo("analytics.pair_counts")
-
-
+@memoized("analytics.baskets")
 def _baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(l_orderkey, l_partkey) deduped basket table, memoized-persisted."""
-    baskets = _BASKETS_CACHE.get(spark, sf_dir)
-    if baskets is None:
-        l = load_table(spark, sf_dir, "lineitem")
-        baskets = l.select("l_orderkey", "l_partkey").distinct().persist()
-        _BASKETS_CACHE.put(spark, sf_dir, baskets)
-    return baskets
+    l = load_table(spark, sf_dir, "lineitem")
+    return l.select("l_orderkey", "l_partkey").distinct().persist()
 
 
-_ITEM_FREQ_CACHE = SessionMemo("analytics.item_freqs")
-
-
+@memoized("analytics.item_freqs")
 def _item_freqs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(l_partkey, n_item) basket frequency per part — consumed TWICE per
     lift/cosine query (both join sides), so the catalog-scale rollup is
     memoized-persisted alongside the pair counts."""
-    cached = _ITEM_FREQ_CACHE.get(spark, sf_dir)
-    if cached is not None:
-        return cached
-    item = (
+    return (
         _baskets(spark, sf_dir)
         .groupBy("l_partkey")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_item"))
         .persist()
     )
-    _ITEM_FREQ_CACHE.put(spark, sf_dir, item)
-    return item
 
 
+# the support-pruned co-purchase pair counts feed BOTH market_basket_pairs
+# (lift) and reco_item_item_cosine (ranked neighbors); memoize the persisted
+# rollup so the basket self-join runs once per (session, sf_dir)
+@memoized("analytics.pair_counts")
 def _pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(pa, pb, n_pair) co-purchase pairs with the support >= 3 floor:
     the basket self-join fans out per ORDER (bounded basket size), the
     floor prunes before any consumer joins."""
-    cached = _PAIR_COUNTS_CACHE.get(spark, sf_dir)
-    if cached is not None:
-        return cached
     baskets = _baskets(spark, sf_dir)
     a = baskets.select("l_orderkey", F.col("l_partkey").alias("pa"))
     b = baskets.select("l_orderkey", F.col("l_partkey").alias("pb"))
-    pair = (
+    return (
         a.join(b, "l_orderkey")
         .where(F.col("pa") < F.col("pb"))
         .groupBy("pa", "pb")
@@ -391,8 +375,6 @@ def _pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("n_pair") >= 3)
         .persist()
     )
-    _PAIR_COUNTS_CACHE.put(spark, sf_dir, pair)
-    return pair
 
 
 @query(
@@ -3796,11 +3778,6 @@ def embedding_matryoshka_energy(
     )
 
 
-# (applicationId, sf_dir) -> persisted 6-column FIFO fact projection —
-# the buy ranges, sell ranges, and returned-qty rollup consume it.
-_FIFO_BASE_CACHE = SessionMemo("analytics.fifo_base")
-
-
 @query(
     "finance_fifo_lot_matching",
     oracle="""
@@ -3872,7 +3849,7 @@ def finance_fifo_lot_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
     # buys, sells, and the returned-qty rollup all consume the projection —
     # persisted + memoized (lesson 27/30, scan_audit-found)
     base = memo_persist(
-        _FIFO_BASE_CACHE,
+        "analytics.fifo_base",
         spark,
         sf_dir,
         lambda: l.select(

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .._memo import SessionMemo
+from .._memo import memoized
 from ..registry import query
 from ..sources import load_table
 from ..kmeans import kmeans_mllib, kmeans_native_df
@@ -154,15 +154,10 @@ _KMEANS_CONTRACT_SQL = f"""
     FROM expl JOIN means USING (d)
     """
 
-_CONTRACT_CACHE = SessionMemo("clustering.contract")
-
-
+@memoized("clustering.contract")
 def _global_moments(spark: SparkSession, sf_dir: str):
     """(n, tss, mean_by_dim) of the embeddings table via the decimal-exact
     recipe the oracle mirrors. Memoized: three engine variants share it."""
-    hit = _CONTRACT_CACHE.get(spark, sf_dir)
-    if hit is not None:
-        return hit
     pts = load_table(spark, sf_dir, "embeddings").select(
         F.col("embedding").cast("array<double>").alias("v")
     )
@@ -176,7 +171,7 @@ def _global_moments(spark: SparkSession, sf_dir: str):
         .collect()[0]["tss"]
     )
     n = pts.count()
-    return _CONTRACT_CACHE.put(spark, sf_dir, (n, tss, mean_by_d))
+    return n, tss, mean_by_d
 
 
 def _kmeans_contract_df(
@@ -499,9 +494,7 @@ def _kmeans_oracle_sql(k: int, rounds: int) -> str:
     )
 
 
-_LLOYD_CACHE = SessionMemo("clustering.lloyd")
-
-
+@memoized("clustering.lloyd")
 def _lloyd_portable(spark: SparkSession, sf_dir: str, k: int, rounds: int):
     """(centroids, final assignment df) of the determinized Lloyd loop:
     salted-md5 init, sequential-fold distances, decimal-exact means —
@@ -510,10 +503,6 @@ def _lloyd_portable(spark: SparkSession, sf_dir: str, k: int, rounds: int):
     and the result is deterministic by construction, so recomputing it
     per query would triple the driver's collect rounds for nothing."""
     from ..kmeans import assign_clusters
-
-    hit = _LLOYD_CACHE.get(spark, sf_dir, k, rounds)
-    if hit is not None:
-        return hit
 
     # fan out the single-row-group embeddings scan: each round's argmin +
     # posexplode otherwise runs on one core
@@ -552,7 +541,6 @@ def _lloyd_portable(spark: SparkSession, sf_dir: str, k: int, rounds: int):
         cents = [
             [by_cid[cid][d] for d in sorted(by_cid[cid])] for cid in sorted(by_cid)
         ]
-    _LLOYD_CACHE.put(spark, sf_dir, k, rounds, (cents, assigned))
     return cents, assigned
 
 

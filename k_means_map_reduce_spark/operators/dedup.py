@@ -29,7 +29,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .._memo import SessionMemo
+from .._memo import memo_persist, memoized
 from ..registry import query
 from ..sources import load_table
 from .textops import WINNOW_CTE_SQL, winnow_fps
@@ -675,15 +675,6 @@ _PMH_PERMS24 = _PMH_PERMS + [
 ]
 _PMH_R = 2  # rows per band
 
-# The verified banding pair graph and its connected components feed three
-# registered queries (pairs, clusters, survivorship) that bench/driver runs
-# back-to-back; memoize per (session, sf_dir) so the signature pipeline and
-# the label-propagation fixpoint run once (LRU + unpersist-on-evict).
-_BANDING_PAIRS_CACHE = SessionMemo("dedup.banding_pairs")
-_BANDING_COMP_CACHE = SessionMemo("dedup.banding_components")
-_PREFIX_JACCARD_CACHE = SessionMemo("dedup.prefix_jaccard")
-
-
 def _pmh_sql_prefix(perms: list[tuple[int, int]]) -> str:
     """DuckDB CTE prefix recomputing the portable shingle sets and minhash
     signatures: toks -> shingles (md5-derived 32-bit hashes) -> sigs."""
@@ -813,15 +804,26 @@ def dedup_minhash_banding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchor tier. (xxhash64 shaved ~15% off the signature scan but no
     second engine can replay it; determinism won.)
     """
-    cached = _BANDING_PAIRS_CACHE.get(spark, sf_dir)
-    if cached is not None:
-        return cached[0]
+    return _banding_pairs(spark, sf_dir)[0]
+
+
+# both the signature build and the verify step read the shingle sets:
+# persist so the md5 HOF chain runs once (CacheManager dedups identical
+# plans across invocations, so repeated calls reuse one cached copy)
+@memoized("dedup.pmh_shingle_sets")
+def _pmh_shingle_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _pmh_shingle_sets(spark, sf_dir).persist()
+
+
+# The verified banding pair graph and its connected components feed three
+# registered queries (pairs, clusters, survivorship) that bench/driver runs
+# back-to-back; memoize per (session, sf_dir) so the signature pipeline and
+# the label-propagation fixpoint run once (LRU + unpersist-on-evict).
+@memoized("dedup.banding_pairs")
+def _banding_pairs(spark: SparkSession, sf_dir: str):
     perms = _PMH_PERMS24
     n_bands = len(perms) // _PMH_R
-    # both the signature build and the verify step read the shingle sets:
-    # persist so the md5 HOF chain runs once (CacheManager dedups identical
-    # plans across invocations, so repeated calls reuse one cached copy)
-    hs_df = _pmh_shingle_sets(spark, sf_dir).persist()
+    hs_df = _pmh_shingle_frame(spark, sf_dir)
     sig = _pmh_signatures(hs_df, perms)
     bands = sig.select(
         "doc_id",
@@ -873,24 +875,21 @@ def dedup_minhash_banding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         # substitution gotcha).
         .localCheckpoint(eager=False)
     )
-    # the memo stores the persisted INTERMEDIATES alongside the output so
-    # LRU eviction / clear_all_memos() unpersists hs_df and bands too
+    # the memo stores the persisted INTERMEDIATE alongside the output so
+    # LRU eviction / clear_all_memos() unpersists bands too
     # (_unpersist_value walks tuples) — storing only `out` would re-run
     # the pipeline on a re-miss while the stale persisted blocks stay
     # pinned (round-7 ADVICE).
-    return _BANDING_PAIRS_CACHE.put(spark, sf_dir, (out, bands, hs_df))[0]
+    return out, bands
 
 
+@memoized("dedup.banding_components")
 def _banding_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, component) over the verified banding pair graph — memoized:
     clusters and survivorship both consume the same label-propagation
     fixpoint, and the loop's per-round jobs dominate their runtime."""
-    cached = _BANDING_COMP_CACHE.get(spark, sf_dir)
-    if cached is not None:
-        return cached
     pairs = dedup_minhash_banding_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    comp = _min_label_components(pairs)
-    return _BANDING_COMP_CACHE.put(spark, sf_dir, comp)
+    return _min_label_components(pairs)
 
 
 @query(
@@ -1270,9 +1269,14 @@ def dedup_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny candidate set's exact verify. The oracle pays the quadratic join
     (fine at the driver's sf0.01) — the Spark plan never does.
     """
-    cached = _PREFIX_JACCARD_CACHE.get(spark, sf_dir)
-    if cached is not None:
-        return cached[0]
+    return _prefix_jaccard(spark, sf_dir)[0]
+
+
+# memoize output + persisted intermediates so repeated invocations in a
+# long-lived session reuse one pinned copy and eviction releases docs/
+# prefix (round-7 ADVICE — same discipline as the banding tier).
+@memoized("dedup.prefix_jaccard")
+def _prefix_jaccard(spark: SparkSession, sf_dir: str):
     d = load_table(spark, sf_dir, "documents")
     toks = F.filter(F.split(_NORM(F.col("text")), " "), lambda t: t != "")
     # persisted: the tokenize+shingle projection otherwise re-runs once per
@@ -1341,10 +1345,7 @@ def dedup_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(jac >= 0.6)
         .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
     )
-    # memoize output + persisted intermediates so repeated invocations in a
-    # long-lived session reuse one pinned copy and eviction releases docs/
-    # prefix (round-7 ADVICE — same discipline as the banding tier).
-    return _PREFIX_JACCARD_CACHE.put(spark, sf_dir, (out, docs, prefix))[0]
+    return out, docs, prefix
 
 
 _PARA_WORDS = 25  # disjoint word-block "paragraph" size (the corpus carries
@@ -1569,9 +1570,6 @@ def dedup_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PFC_CACHE = SessionMemo("dedup.prefix_cosine")
-
-
 @query(
     "dedup_prefix_filter_cosine",
     oracle="""
@@ -1627,9 +1625,11 @@ def dedup_prefix_filter_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact verify runs on the candidate set, and the persisted
     intermediates are memoized with the output (round-7 ADVICE).
     """
-    cached = _PFC_CACHE.get(spark, sf_dir)
-    if cached is not None:
-        return cached[0]
+    return _prefix_cosine(spark, sf_dir)[0]
+
+
+@memoized("dedup.prefix_cosine")
+def _prefix_cosine(spark: SparkSession, sf_dir: str):
     d = load_table(spark, sf_dir, "documents")
     toks = F.filter(F.split(_NORM(F.col("text")), " "), lambda t: t != "")
     docs = (
@@ -1684,7 +1684,7 @@ def dedup_prefix_filter_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(100 * o * o >= 49 * sa * sb)
         .select("doc_a", "doc_b", F.round(cos, 6).alias("cosine"))
     )
-    return _PFC_CACHE.put(spark, sf_dir, (out, docs, prefix))[0]
+    return out, docs, prefix
 
 
 def _semantic_pairs_oracle(k: int, rounds: int, tau: float) -> str:
@@ -1735,10 +1735,7 @@ def dedup_semantic_cluster_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.vectors import dot, l2_norm
     from .clustering import _lloyd_portable
 
-    cached = _SEMANTIC_CORPUS_CACHE.get(spark, sf_dir)
-    if cached is not None:
-        corpus = cached[0]
-    else:
+    def build() -> DataFrame:
         _, assigned = _lloyd_portable(spark, sf_dir, k=4, rounds=3)
         # persisted + memoized: corpus feeds BOTH sides of the
         # within-cluster pair join (scan_audit: embeddings x2, zero reuse
@@ -1753,10 +1750,11 @@ def dedup_semantic_cluster_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             F.col("v").cast("array<double>").alias("v"),
         )
-        corpus = corpus.select(
+        return corpus.select(
             "cid", "vec_id", "v", l2_norm(F.col("v")).alias("nrm")
-        ).persist()
-        _SEMANTIC_CORPUS_CACHE.put(spark, sf_dir, (corpus,))
+        )
+
+    corpus = memo_persist("dedup.semantic_corpus", spark, sf_dir, build)
     a = corpus.select(
         "cid",
         F.col("vec_id").alias("vec_a"),
@@ -1800,17 +1798,6 @@ def dedup_semantic_cluster_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _CONTAIN_DF_CAP = 50  # stop-shingle cap: postings hotter than this don't vote
 _CONTAIN_TAU = 0.6
-
-# (applicationId, sf_dir) -> persisted (cid, vec_id, v) Lloyd assignment —
-# both self-join sides of the semantic pair verify consume it.
-_SEMANTIC_CORPUS_CACHE = SessionMemo("dedup.semantic_corpus")
-
-# (applicationId, sf_dir) -> persisted doc-grain shingle-hash table — the
-# postings build and both verify sides consume it, and warm bench reps
-# must reuse one bounded cache entry, not pin a fresh block per call
-# (round-9 ADVICE / lesson 30).
-_CONTAIN_SHINGLES_CACHE = SessionMemo("dedup.containment_shingles")
-
 
 @query(
     "dedup_containment_pairs",
@@ -1879,22 +1866,21 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = load_table(spark, sf_dir, "documents")
     _gate_quadratic(d, "dedup_containment_pairs", "dedup_minhash_banding_pairs")
-    hit = _CONTAIN_SHINGLES_CACHE.get(spark, sf_dir)
-    if hit is not None:
-        (sh,) = hit
-    else:
-        toks = F.filter(F.split(_NORM(F.col("text")), " "), lambda t: t != "")
-        sh = (
-            d.select(
-                "doc_id",
-                F.array_distinct(
-                    F.transform(shingles(F.col("text")), lambda g: F.xxhash64(g))
-                ).alias("hs"),
-            )
-            .where(F.size(toks) >= 3)
-            .persist()
-        )
-        _CONTAIN_SHINGLES_CACHE.put(spark, sf_dir, (sh,))
+    # the doc-grain shingle-hash table feeds the postings build and both
+    # verify sides, and warm bench reps must reuse one bounded cache entry,
+    # not pin a fresh block per call (round-9 ADVICE / lesson 30)
+    toks = F.filter(F.split(_NORM(F.col("text")), " "), lambda t: t != "")
+    sh = memo_persist(
+        "dedup.containment_shingles",
+        spark,
+        sf_dir,
+        lambda: d.select(
+            "doc_id",
+            F.array_distinct(
+                F.transform(shingles(F.col("text")), lambda g: F.xxhash64(g))
+            ).alias("hs"),
+        ).where(F.size(toks) >= 3),
+    )
     postings = sh.select("doc_id", F.explode("hs").alias("h"))
     rare = postings.groupBy("h").agg(F.count(F.lit(1)).alias("df")).where(
         F.col("df") <= _CONTAIN_DF_CAP
@@ -1922,11 +1908,6 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("containment") >= _CONTAIN_TAU)
     )
 
-
-# (applicationId, sf_dir) -> persisted (doc_id, para_idx, hs) paragraph
-# shingle table — the postings build and both verify sides consume it
-# (lesson 30: SessionMemo, never a bare per-call persist).
-_PARA_SHINGLES_CACHE = SessionMemo("dedup.paragraph_shingles")
 
 _PARA_CONTAIN_DF_CAP = 50
 _PARA_CONTAIN_TAU = 0.6
@@ -2012,10 +1993,10 @@ def dedup_paragraph_containment_pairs(
     _gate_quadratic(
         d, "dedup_paragraph_containment_pairs", "dedup_minhash_banding_pairs"
     )
-    hit = _PARA_SHINGLES_CACHE.get(spark, sf_dir)
-    if hit is not None:
-        (sh,) = hit
-    else:
+    # the (doc_id, para_idx, hs) paragraph shingle table feeds the postings
+    # build and both verify sides (lesson 30: memoized, never a bare
+    # per-call persist)
+    def build() -> DataFrame:
         toks = F.filter(F.split(_NORM(F.col("text")), " "), lambda t: t != "")
         n_paras = F.ceil(
             F.size("ws") / F.lit(float(_PARA_WORDS))
@@ -2032,7 +2013,7 @@ def dedup_paragraph_containment_pairs(
                 ).alias("b"),
             )
         )
-        sh = (
+        return (
             paras.where(F.size("b") >= 3)
             .select(
                 "doc_id",
@@ -2053,9 +2034,9 @@ def dedup_paragraph_containment_pairs(
             .repartition(
                 spark.sparkContext.defaultParallelism, "doc_id", "para_idx"
             )
-            .persist()
         )
-        _PARA_SHINGLES_CACHE.put(spark, sf_dir, (sh,))
+
+    sh = memo_persist("dedup.paragraph_shingles", spark, sf_dir, build)
     # NOTE: persisting this explode measured NEUTRAL (1.73 vs 1.73 s
     # min-of-5 @ sf0.1) — the explode off the cached shingle table is
     # cheap; the cost lives in the candidate distinct + verify joins.
@@ -2588,29 +2569,18 @@ def _mh_err_oracle_sql() -> str:
     """
 
 
-# (applicationId, sf_dir) -> eagerly-checkpointed (doc_id, s0..s23)
-# signature frame off the persisted shingle sets. r13 optimization: the
-# estimator-error query consumed the LAZY signature aggregation through BOTH
-# join sides (two explode+24-min runs per invocation) and the b×r ablation
-# re-checkpointed it per invocation (~0.8 s each at sf0.1) — one memoized
-# checkpoint serves every warm rep of both. Content is deterministic
-# (portable md5/affine mins); all consumers join/aggregate, so
-# checkpoint-order differences cannot reach any result.
-_SIG24_CACHE = SessionMemo("dedup.pmh_sig24")
-
-
-def _pmh_sig24(spark: SparkSession, sf_dir: str, hs_df: DataFrame) -> DataFrame:
-    """24-perm signature frame off `hs_df`, memoized per (session, sf_dir).
-
-    CONTRACT (r13 advice item 2): `hs_df` MUST be the canonical per-sf_dir
-    shingle frame (_BANDING_PAIRS_CACHE[2]); the memo keys on sf_dir only,
-    so a caller passing any other shingle frame for the same sf_dir would
-    silently receive the canonical frame's signatures."""
-    hit = _SIG24_CACHE.get(spark, sf_dir)
-    if hit is not None:
-        return hit
-    sig = _pmh_signatures(hs_df, _PMH_PERMS24).localCheckpoint(eager=True)
-    return _SIG24_CACHE.put(spark, sf_dir, sig)
+# Eagerly-checkpointed (doc_id, s0..s23) signature frame off the persisted
+# shingle sets. r13 optimization: the estimator-error query consumed the LAZY
+# signature aggregation through BOTH join sides (two explode+24-min runs per
+# invocation) and the b×r ablation re-checkpointed it per invocation (~0.8 s
+# each at sf0.1) — one memoized checkpoint serves every warm rep of both.
+# Content is deterministic (portable md5/affine mins); all consumers
+# join/aggregate, so checkpoint-order differences cannot reach any result.
+@memoized("dedup.pmh_sig24")
+def _pmh_sig24(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """24-perm signature frame off the memoized shingle sets."""
+    hs_df = _pmh_shingle_frame(spark, sf_dir)
+    return _pmh_signatures(hs_df, _PMH_PERMS24).localCheckpoint(eager=True)
 
 
 @query("dedup_minhash_estimate_error", oracle=_mh_err_oracle_sql())
@@ -2634,8 +2604,7 @@ def dedup_minhash_estimate_error(
     decimal-averaged.
     """
     pairs = dedup_minhash_banding_pairs(spark, sf_dir)
-    hs_df = _BANDING_PAIRS_CACHE.get(spark, sf_dir)[2]
-    sig = _pmh_sig24(spark, sf_dir, hs_df)
+    sig = _pmh_sig24(spark, sf_dir)
     n = len(_PMH_PERMS24)
     sa = sig.select(
         F.col("doc_id").alias("_a"), *[F.col(f"s{j}").alias(f"a{j}") for j in range(n)]
@@ -2784,18 +2753,12 @@ def dedup_banding_br_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is how b/r gets chosen before a full run: the ablation
     costs one signature pass plus band-key self-joins — it never touches
     text, and candidates stay bucket-bounded per config."""
-    # fill the memo (and reuse everything if it is already warm)
-    dedup_minhash_banding_pairs(spark, sf_dir)
-    hs_df = _BANDING_PAIRS_CACHE.get(spark, sf_dir)[2]
+    hs_df = _pmh_shingle_frame(spark, sf_dir)
     # four per-config band frames each consume sig: the memoized checkpoint
     # makes the explode+min aggregation over the shingle sets run once per
     # SESSION (shared with dedup_minhash_estimate_error), not once per
     # config or per invocation
-    sig = _pmh_sig24(spark, sf_dir, hs_df)
-    n = len(_PMH_PERMS24)
-    cand = _SIG24_CACHE.get(spark, (sf_dir, "br_cand"))
-    if cand is not None:
-        return _br_ablation_tail(cand, hs_df)
+    sig = _pmh_sig24(spark, sf_dir)
     band_frames = []
     for b, r in _BR_CONFIGS:
         stack_args = []
@@ -2832,22 +2795,11 @@ def dedup_banding_br_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         # r13: cand is consumed TWICE (the distinct pair set for the verify
         # AND the per-config rejoin) — the eager checkpoint cuts that
-        # lineage. r14: the checkpoint is additionally MEMOIZED per
-        # (session, sf_dir): the eager cut runs a JOB during DataFrame
-        # construction, so every warm invocation was silently re-running
-        # the 4-config band self-join + distinct (~1.8 s of the 2.3 s warm
-        # rep — measured by splitting build vs count time). Content is
-        # deterministic (portable md5/affine mins); candidate rows are 4
-        # small ints, same footprint class as the signature memo above.
+        # lineage. It is deliberately not memoized: the candidate set is
+        # this query's near-result, so every invocation re-runs the band
+        # self-join.
+        .localCheckpoint(eager=True)
     )
-    cand = _SIG24_CACHE.put(
-        spark, (sf_dir, "br_cand"), cand.localCheckpoint(eager=True)
-    )
-    return _br_ablation_tail(cand, hs_df)
-
-
-def _br_ablation_tail(cand: DataFrame, hs_df: DataFrame) -> DataFrame:
-    """Verify + per-config rollup off the memoized candidate set."""
     # exact verify once per DISTINCT pair, then re-attach per config
     pair_ids = cand.select("d1", "d2").distinct()
     h1 = hs_df.select(F.col("doc_id").alias("d1"), F.col("sh").alias("sh1"))

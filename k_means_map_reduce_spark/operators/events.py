@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .._memo import SessionMemo, memo_persist
+from .._memo import memoized
 from ..registry import query
 from ..sources import load_table
 from ._util import dsum, sql_dsum
@@ -1679,7 +1679,25 @@ def events_user_activity_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # per-user (signup, first-purchase, last-event) days — shared by the
 # Kaplan-Meier estimator and (r11) the log-rank cohort comparison
-_KM_FIRSTS_CACHE = SessionMemo("events.km_firsts")
+@memoized("events.km_firsts")
+def _km_firsts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    e = load_table(spark, sf_dir, "events")
+    day = F.datediff(
+        F.date_trunc("day", "ts"), F.lit("1970-01-01").cast("timestamp_ntz")
+    )
+    return (
+        e.groupBy("user_id")
+        .agg(
+            F.min(F.when(F.col("event_type") == "signup", day)).alias(
+                "signup_day"
+            ),
+            F.min(F.when(F.col("event_type") == "purchase", day)).alias(
+                "purchase_day"
+            ),
+            F.max(day).alias("last_day"),
+        )
+        .persist()
+    )
 
 
 @query(
@@ -1771,27 +1789,10 @@ def events_kaplan_meier_conversion(
     day-grain grid (hundreds of rows), and two ordered windows over the
     grid — nothing fact-grain past the first rollup.
     """
-    e = load_table(spark, sf_dir, "events")
-    day = F.datediff(
-        F.date_trunc("day", "ts"), F.lit("1970-01-01").cast("timestamp_ntz")
-    )
     # last_day rides the same per-user rollup so the censoring horizon
     # (global max event day = max over per-user maxes) never re-scans the
     # fact — ONE events pass total (the scan-audit discipline, lesson 27)
-    firsts = memo_persist(
-        _KM_FIRSTS_CACHE,
-        spark,
-        sf_dir,
-        lambda: e.groupBy("user_id").agg(
-            F.min(F.when(F.col("event_type") == "signup", day)).alias(
-                "signup_day"
-            ),
-            F.min(F.when(F.col("event_type") == "purchase", day)).alias(
-                "purchase_day"
-            ),
-            F.max(day).alias("last_day"),
-        ),
-    )
+    firsts = _km_firsts(spark, sf_dir)
     horizon = firsts.agg(F.max("last_day").alias("max_day"))
     converted = F.col("purchase_day").isNotNull() & (
         F.col("purchase_day") >= F.col("signup_day")
@@ -1952,24 +1953,7 @@ def events_logrank_signup_cohorts(
     statistic aggregates a few hundred grid rows regardless of event
     volume.
     """
-    e = load_table(spark, sf_dir, "events")
-    day = F.datediff(
-        F.date_trunc("day", "ts"), F.lit("1970-01-01").cast("timestamp_ntz")
-    )
-    firsts = memo_persist(
-        _KM_FIRSTS_CACHE,
-        spark,
-        sf_dir,
-        lambda: e.groupBy("user_id").agg(
-            F.min(F.when(F.col("event_type") == "signup", day)).alias(
-                "signup_day"
-            ),
-            F.min(F.when(F.col("event_type") == "purchase", day)).alias(
-                "purchase_day"
-            ),
-            F.max(day).alias("last_day"),
-        ),
-    )
+    firsts = _km_firsts(spark, sf_dir)
     horizon = firsts.agg(
         F.max("last_day").alias("max_day"),
         (
@@ -2124,24 +2108,7 @@ def events_nelson_aalen_hazard(
     At 100 TB: identical shape to the KM query — one memoized fact pass,
     then day-grain windows.
     """
-    e = load_table(spark, sf_dir, "events")
-    day = F.datediff(
-        F.date_trunc("day", "ts"), F.lit("1970-01-01").cast("timestamp_ntz")
-    )
-    firsts = memo_persist(
-        _KM_FIRSTS_CACHE,
-        spark,
-        sf_dir,
-        lambda: e.groupBy("user_id").agg(
-            F.min(F.when(F.col("event_type") == "signup", day)).alias(
-                "signup_day"
-            ),
-            F.min(F.when(F.col("event_type") == "purchase", day)).alias(
-                "purchase_day"
-            ),
-            F.max(day).alias("last_day"),
-        ),
-    )
+    firsts = _km_firsts(spark, sf_dir)
     horizon = firsts.agg(F.max("last_day").alias("max_day"))
     converted = F.col("purchase_day").isNotNull() & (
         F.col("purchase_day") >= F.col("signup_day")
@@ -2342,24 +2309,7 @@ def events_rmst_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At 100 TB: the KM plan plus two windows over the <= tau-row grid.
     """
-    e = load_table(spark, sf_dir, "events")
-    day = F.datediff(
-        F.date_trunc("day", "ts"), F.lit("1970-01-01").cast("timestamp_ntz")
-    )
-    firsts = memo_persist(
-        _KM_FIRSTS_CACHE,
-        spark,
-        sf_dir,
-        lambda: e.groupBy("user_id").agg(
-            F.min(F.when(F.col("event_type") == "signup", day)).alias(
-                "signup_day"
-            ),
-            F.min(F.when(F.col("event_type") == "purchase", day)).alias(
-                "purchase_day"
-            ),
-            F.max(day).alias("last_day"),
-        ),
-    )
+    firsts = _km_firsts(spark, sf_dir)
     horizon = firsts.agg(F.max("last_day").alias("max_day"))
     converted = F.col("purchase_day").isNotNull() & (
         F.col("purchase_day") >= F.col("signup_day")
@@ -2535,24 +2485,7 @@ def events_fleming_harrington_logrank(
     day-grain grid — the memoized firsts rollup still pays the only
     fact scan.
     """
-    e = load_table(spark, sf_dir, "events")
-    day = F.datediff(
-        F.date_trunc("day", "ts"), F.lit("1970-01-01").cast("timestamp_ntz")
-    )
-    firsts = memo_persist(
-        _KM_FIRSTS_CACHE,
-        spark,
-        sf_dir,
-        lambda: e.groupBy("user_id").agg(
-            F.min(F.when(F.col("event_type") == "signup", day)).alias(
-                "signup_day"
-            ),
-            F.min(F.when(F.col("event_type") == "purchase", day)).alias(
-                "purchase_day"
-            ),
-            F.max(day).alias("last_day"),
-        ),
-    )
+    firsts = _km_firsts(spark, sf_dir)
     horizon = firsts.agg(
         F.max("last_day").alias("max_day"),
         (
@@ -2750,24 +2683,7 @@ def events_gehan_wilcoxon_logrank(
     At 100 TB: identical plan shape to the plain log-rank — the
     SessionMemo'd per-user firsts rollup pays the only fact scan; the
     day-grain grid rides two calendar-bounded windows."""
-    e = load_table(spark, sf_dir, "events")
-    day = F.datediff(
-        F.date_trunc("day", "ts"), F.lit("1970-01-01").cast("timestamp_ntz")
-    )
-    firsts = memo_persist(
-        _KM_FIRSTS_CACHE,
-        spark,
-        sf_dir,
-        lambda: e.groupBy("user_id").agg(
-            F.min(F.when(F.col("event_type") == "signup", day)).alias(
-                "signup_day"
-            ),
-            F.min(F.when(F.col("event_type") == "purchase", day)).alias(
-                "purchase_day"
-            ),
-            F.max(day).alias("last_day"),
-        ),
-    )
+    firsts = _km_firsts(spark, sf_dir)
     horizon = firsts.agg(
         F.max("last_day").alias("max_day"),
         (

@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .._memo import SessionMemo, memo_persist
+from .._memo import memo_persist, memoized
 from ..registry import query
 from ..sources import load_table
 
@@ -681,11 +681,6 @@ def geo_geohash_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _KNN_K = 3
-_KNN_CACHE = SessionMemo("geo.knn_ring")
-
-# (applicationId, sf_dir) -> persisted distinct (user, day, slot, cell)
-# fixes — both self-join sides of the co-location pair count consume it.
-_COLOC_FIXES_CACHE = SessionMemo("geo.colocation_fixes")
 
 
 @query(
@@ -751,6 +746,7 @@ _COLOC_FIXES_CACHE = SessionMemo("geo.colocation_fixes")
     FROM (SELECT * FROM top1 UNION ALL SELECT * FROM top2)
     """,
 )
+@memoized("geo.knn_ring")
 def geo_knn_ring_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RING-EXPANDING k-nearest-neighbor search (k=3): every point first
     probes its 3x3 cell neighborhood; only points that found fewer than k
@@ -769,9 +765,6 @@ def geo_knn_ring_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     (lesson 25) with bounded x9 / x25 probe fan-out — never a quadratic
     radius join; the escalation side runs only on the sparse subset.
     """
-    cached = _KNN_CACHE.get(spark, sf_dir)
-    if cached is not None:
-        return cached[0]
     pts = _points(spark, sf_dir)
     cells = pts.select(
         "custkey",
@@ -851,7 +844,7 @@ def geo_knn_ring_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the checkpoint materialization above — release the pin now instead of
     # carrying it in the memo (round-7 ADVICE discipline, simplified)
     ring1.unpersist()
-    return _KNN_CACHE.put(spark, sf_dir, (out,))[0]
+    return out
 
 
 # Deterministic random-walk trajectories over the events stream: each user
@@ -882,13 +875,10 @@ _WALK_SQL = """
 """
 
 
-# (applicationId, sf_dir) -> persisted (user_id, event_id, ts, ilat, ilon)
-# trajectory table — ~10 geo queries derive from it, and each used to
-# re-run the 4x md5 step derivation + per-user prefix-sum window per
-# invocation (r14, guide §1.2: compute the shared primitive once).
-_WALK_CACHE = SessionMemo("geo.walk_fixes")
-
-
+# persisted (user_id, event_id, ts, ilat, ilon) trajectory table — ~10 geo
+# queries derive from it, and each used to re-run the 4x md5 step derivation
+# + per-user prefix-sum window per invocation (r14, guide §1.2: compute the
+# shared primitive once).
 def _walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(user_id, event_id, ts, ilat, ilon): the deterministic random-walk
     trajectory mirror of _WALK_SQL. Memoized + persisted per
@@ -925,7 +915,7 @@ def _walk(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("base_lon") + F.sum("dlon").over(w)).alias("ilon"),
         )
 
-    return memo_persist(_WALK_CACHE, spark, sf_dir, build)
+    return memo_persist("geo.walk_fixes", spark, sf_dir, build)
 
 
 @query(
@@ -1254,23 +1244,19 @@ def geo_colocation_pairs_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # memoized + persisted: fixes feeds BOTH self-join sides — unpersisted,
     # the walk window + distinct recompute per side (lesson 15/27); and a
     # bare per-call persist would pin a fresh block every warm bench rep
-    # (round-9 ADVICE / lesson 30), so it rides SessionMemo like _KNN_CACHE.
-    hit = _COLOC_FIXES_CACHE.get(spark, sf_dir)
-    if hit is not None:
-        (fixes,) = hit
-    else:
-        fixes = (
-            walk.select(
-                "user_id",
-                F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
-                (F.hour("ts") * 2 + F.floor(F.minute("ts") / 30)).alias("slot"),
-                F.floor((F.col("ilon") + 170000) / 5000.0).cast("bigint").alias("cx"),
-                F.floor((F.col("ilat") + 60000) / 5000.0).cast("bigint").alias("cy"),
-            )
-            .distinct()
-            .persist()
-        )
-        _COLOC_FIXES_CACHE.put(spark, sf_dir, (fixes,))
+    # (round-9 ADVICE / lesson 30), so it rides the session memo.
+    fixes = memo_persist(
+        "geo.colocation_fixes",
+        spark,
+        sf_dir,
+        lambda: walk.select(
+            "user_id",
+            F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
+            (F.hour("ts") * 2 + F.floor(F.minute("ts") / 30)).alias("slot"),
+            F.floor((F.col("ilon") + 170000) / 5000.0).cast("bigint").alias("cx"),
+            F.floor((F.col("ilat") + 60000) / 5000.0).cast("bigint").alias("cy"),
+        ).distinct(),
+    )
     a = fixes.select(
         F.col("user_id").alias("user_a"), "day", "slot", "cx", "cy"
     )
@@ -1765,19 +1751,6 @@ def geo_dbscan_core_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# DBSCAN neighbor pairs — consumed by the core census, the border pass,
-# and the cluster extraction
-_DBSCAN_PAIRS_CACHE = SessionMemo("geo.dbscan_pairs")
-# core/noise flags: a dimension-scale rollup over the persisted pairs,
-# consumed by several branches in BOTH the census and the extraction —
-# memoized or the nbr aggregation re-runs once per consumer
-_DBSCAN_FLAGS_CACHE = SessionMemo("geo.dbscan_flags")
-# core-component labels: the star-contraction fixpoint is the expensive
-# stage of the cluster extraction — memoize the materialized (core,
-# cluster_id) frame so warm reps pay a checkpoint read
-_DBSCAN_COMP_CACHE = SessionMemo("geo.dbscan_components")
-
-
 def _dbscan_parts(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -1815,8 +1788,10 @@ def _dbscan_parts(
     d2 = (F.col("b_lat") - F.col("a_lat")) * (
         F.col("b_lat") - F.col("a_lat")
     ) + (F.col("b_lon") - F.col("a_lon")) * (F.col("b_lon") - F.col("a_lon"))
+    # DBSCAN neighbor pairs — consumed by the core census, the border pass,
+    # and the cluster extraction
     pairs = memo_persist(
-        _DBSCAN_PAIRS_CACHE,
+        "geo.dbscan_pairs",
         spark,
         sf_dir,
         lambda: fanned.join(b, ["cx", "cy"])
@@ -1839,8 +1814,44 @@ def _dbscan_parts(
             )
         )
 
-    flags = memo_persist(_DBSCAN_FLAGS_CACHE, spark, sf_dir, _flags)
+    # core/noise flags: a dimension-scale rollup over the persisted pairs,
+    # consumed by several branches in BOTH the census and the extraction —
+    # memoized or the nbr aggregation re-runs once per consumer
+    flags = memo_persist("geo.dbscan_flags", spark, sf_dir, _flags)
     return celled, pairs, flags
+
+
+# core-component labels: the star-contraction fixpoint is the expensive
+# stage of the cluster extraction — memoize the materialized (core,
+# cluster_id) frame so warm reps pay a checkpoint read
+@memoized("geo.dbscan_components")
+def _dbscan_components(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .dedup import _star_contraction_components
+
+    _celled, pairs, flags = _dbscan_parts(spark, sf_dir)
+    cores = flags.where(F.col("is_core") == 1).select("custkey")
+    # Eager localCheckpoint BEFORE the fixpoint loop: core_edges'
+    # lineage embeds the fan-out pair join TWICE (directly and
+    # through flags), and the contraction re-renders the plan every
+    # round — without the cut, the plan STRING alone OOMs a default
+    # 1g driver. The frame is core-core pairs: cell-occupancy
+    # bounded, small.
+    core_edges = (
+        pairs.join(
+            cores.select(F.col("custkey").alias("a_id")), "a_id"
+        )
+        .join(cores.select(F.col("custkey").alias("b_id")), "b_id")
+        .select("a_id", "b_id")
+        .localCheckpoint(eager=True)
+    )
+    return (
+        _star_contraction_components(core_edges)
+        .select(
+            F.col("doc_id").alias("custkey"),
+            F.col("component").alias("cluster_id"),
+        )
+        .localCheckpoint(eager=True)
+    )
 
 
 @query(
@@ -1930,35 +1941,9 @@ def geo_dbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     otherwise drop. The oracle replays the whole pipeline: pair join,
     flags, core-edge fixpoint via recursive CTE, min-label border
     attachment."""
-    from .dedup import _star_contraction_components
-
     _celled, pairs, flags = _dbscan_parts(spark, sf_dir)
     cores = flags.where(F.col("is_core") == 1).select("custkey")
-
-    def _components() -> DataFrame:
-        # Eager localCheckpoint BEFORE the fixpoint loop: core_edges'
-        # lineage embeds the fan-out pair join TWICE (directly and
-        # through flags), and the contraction re-renders the plan every
-        # round — without the cut, the plan STRING alone OOMs a default
-        # 1g driver. The frame is core-core pairs: cell-occupancy
-        # bounded, small.
-        core_edges = (
-            pairs.join(
-                cores.select(F.col("custkey").alias("a_id")), "a_id"
-            )
-            .join(cores.select(F.col("custkey").alias("b_id")), "b_id")
-            .select("a_id", "b_id")
-            .localCheckpoint(eager=True)
-        )
-        return _star_contraction_components(core_edges).select(
-            F.col("doc_id").alias("custkey"),
-            F.col("component").alias("cluster_id"),
-        )
-
-    comp = _DBSCAN_COMP_CACHE.get(spark, sf_dir)
-    if comp is None:
-        comp = _components().localCheckpoint(eager=True)
-        _DBSCAN_COMP_CACHE.put(spark, sf_dir, comp)
+    comp = _dbscan_components(spark, sf_dir)
     core_labels = (
         cores.join(comp, "custkey", "left")
         .select(

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .._memo import SessionMemo
+from .._memo import memoized
 from ..registry import query
 from ..sources import load_table
 from ..functions.zorder import (
@@ -207,7 +207,7 @@ def layout_index_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     build — and the staging dir is removed at interpreter exit.
     """
     e = load_table(spark, sf_dir, "events")
-    path, index = _zidx_artifacts(spark, sf_dir, e)
+    path, index = _zidx_artifacts(spark, sf_dir)
     target = e.agg(F.min("user_id")).first()[0]
     rows, _n = pruned_point_read(spark, path, index, "user_id", target)
     return rows.select(
@@ -215,24 +215,18 @@ def layout_index_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ZIDX_CACHE = SessionMemo("layout.zidx")
-
-
-def _zidx_artifacts(spark: SparkSession, sf_dir: str, e: DataFrame):
+@memoized("layout.zidx")
+def _zidx_artifacts(spark: SparkSession, sf_dir: str):
     """(staged z-ordered path, cached index DF) per (session, sf_dir)."""
     import atexit
-    import os
     import shutil
     import tempfile
 
-    hit = _ZIDX_CACHE.get(spark, os.path.abspath(sf_dir))
-    if hit is not None:
-        return hit
     path = tempfile.mkdtemp(prefix="kmmr_zidx_")
     atexit.register(shutil.rmtree, path, ignore_errors=True)
+    e = load_table(spark, sf_dir, "events")
     zorder_write(e, path, "user_id", "value", num_files=8)
     index = build_file_index(spark, path, "user_id").persist()
-    _ZIDX_CACHE.put(spark, os.path.abspath(sf_dir), (path, index))
     return path, index
 
 

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .._memo import SessionMemo
+from .._memo import memo_persist
 from ..registry import query
 from ..sources import load_table
 
@@ -432,11 +432,6 @@ def multimodal_clip_training_pairs(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-# (applicationId, sf_dir) -> persisted 4x32-bit fingerprint table (pHash
-# stand-in): postings, candidate join, and Hamming verify all consume it.
-_PHASH_CACHE = SessionMemo("multimodal.phash_sigs")
-
-
 @query(
     "multimodal_phash_near_dup",
     oracle="""
@@ -496,10 +491,7 @@ def multimodal_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     verify) real, tested, and ORACLED: DuckDB recomputes fingerprints
     from the same bytes and brute-replays the blocking.
     """
-    cached = _PHASH_CACHE.get(spark, sf_dir)
-    if cached is not None:
-        sigs = cached[0]
-    else:
+    def build() -> DataFrame:
         m = media_table(spark, sf_dir)
         crop = F.substring(
             F.lower(
@@ -518,10 +510,9 @@ def multimodal_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # candidate-join sides, AND both verify sides — unpersisted, the
         # decode+normalize+md5 scan re-runs 10x (scan-audit finding,
         # lesson 27). 4 longs per asset; bytes never leave the scan.
-        sigs = m.select(
-            "doc_id", *[chunk(i).alias(f"c{i}") for i in range(4)]
-        ).persist()
-        _PHASH_CACHE.put(spark, sf_dir, (sigs,))
+        return m.select("doc_id", *[chunk(i).alias(f"c{i}") for i in range(4)])
+
+    sigs = memo_persist("multimodal.phash_sigs", spark, sf_dir, build)
     posts = None
     for i in range(4):
         p = sigs.select(

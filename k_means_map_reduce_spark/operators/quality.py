@@ -27,7 +27,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .._memo import SessionMemo, memo_persist
+from .._memo import memo_persist
 from ..registry import query
 from ..sources import load_table
 
@@ -862,11 +862,6 @@ def privacy_l_diversity_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (nation, segment, bucket) counts — every t-closeness distribution
-# derives from this finest rollup
-_TCLOSE_CELLS_CACHE = SessionMemo("quality.tclose_cells")
-
-
 @query(
     "privacy_t_closeness_emd",
     oracle="""
@@ -946,7 +941,7 @@ def privacy_t_closeness_emd(spark: SparkSession, sf_dir: str) -> DataFrame:
     # constants) derives from it (scan_audit/lesson 27; memo per
     # lesson 30)
     cells = memo_persist(
-        _TCLOSE_CELLS_CACHE,
+        "quality.tclose_cells",
         spark,
         sf_dir,
         lambda: rows_.groupBy("nk", "seg", "b").agg(

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .._memo import SessionMemo
+from .._memo import memoized
 from ..registry import query
 from ..sources import load_table
 from ..functions.vectors import cosine_similarity
@@ -400,20 +400,14 @@ def sim_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _PQ_M, _PQ_KSUB, _PQ_DSUB = 8, 32, 8  # subspaces × codebook size × dims-per-sub
 _PQ_SHORTLIST = 16 * TOP_K
-_PQ_INDEX_CACHE = SessionMemo("similarity.pq_index")
 
 
+@memoized("similarity.pq_index")
 def _pq_index(spark: SparkSession, sf_dir: str):
     """(normalized corpus, codebooks ndarray, encoded codes DF) — memoized."""
-    import os as _os
-
     import numpy as np
 
     from ..functions.vectors import l2_norm
-
-    hit = _PQ_INDEX_CACHE.get(spark, _os.path.abspath(sf_dir))
-    if hit is not None:
-        return hit
 
     M, KSUB, DSUB = _PQ_M, _PQ_KSUB, _PQ_DSUB
     e = load_table(spark, sf_dir, "embeddings")
@@ -473,7 +467,6 @@ def _pq_index(spark: SparkSession, sf_dir: str):
             )
 
     encoded = corpus.mapInPandas(encode, "vec_id LONG, codes ARRAY<INT>").persist()
-    _PQ_INDEX_CACHE.put(spark, _os.path.abspath(sf_dir), (corpus, codebooks, encoded))
     return corpus, codebooks, encoded
 
 
@@ -568,22 +561,16 @@ def sim_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _IVF_CELLS, _IVF_NPROBE = 16, 8
-_IVFPQ_INDEX_CACHE = SessionMemo("similarity.ivfpq_index")
 
 
+@memoized("similarity.ivfpq_index")
 def _ivfpq_index(spark: SparkSession, sf_dir: str):
     """(encoded codes DF with cell, coarse centers, residual codebooks,
     normalized corpus) — memoized per (session, sf_dir) like _pq_index."""
-    import os as _os
-
     import numpy as np
 
     from ..kmeans import kmeans_arrow
     from ..functions.vectors import l2_norm
-
-    hit = _IVFPQ_INDEX_CACHE.get(spark, _os.path.abspath(sf_dir))
-    if hit is not None:
-        return hit
 
     M, KSUB, DSUB = _PQ_M, _PQ_KSUB, _PQ_DSUB
     e = load_table(spark, sf_dir, "embeddings")
@@ -663,7 +650,6 @@ def _ivfpq_index(spark: SparkSession, sf_dir: str):
     encoded = corpus.mapInPandas(
         encode, "vec_id LONG, cell INT, codes ARRAY<INT>"
     ).persist()
-    _IVFPQ_INDEX_CACHE.put(spark, _os.path.abspath(sf_dir), (encoded, centers, codebooks, corpus))
     return encoded, centers, codebooks, corpus
 
 
@@ -815,7 +801,6 @@ def sim_centroid_distance_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _MMR_K = 5  # picks per query
 _MMR_POOL = 20  # relevance shortlist size fed into the re-rank
-_MMR_CACHE = SessionMemo("similarity.mmr_rerank")
 
 
 def _mmr_oracle_sql() -> str:
@@ -890,6 +875,7 @@ def _mmr_oracle_sql() -> str:
 
 
 @query("sim_mmr_rerank", oracle=_mmr_oracle_sql())
+@memoized("similarity.mmr_rerank")
 def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximal Marginal Relevance re-rank (Carbonell & Goldstein '98,
     lambda = 0.5): greedily pick {k} results per query from the exact
@@ -912,9 +898,6 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     memoized per (session, sf_dir) so repeated invocations don't replay
     the shortlist/pairwise build (the banding-tier discipline).
     """
-    cached = _MMR_CACHE.get(spark, sf_dir)
-    if cached is not None:
-        return cached[0]
     e = load_table(spark, sf_dir, "embeddings")
     q = e.where(F.col("vec_id") < N_QUERY).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
@@ -992,9 +975,7 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         picks = picks.unionAll(pick_t).localCheckpoint(eager=False)
     # eager: materialize ONCE and cut every upstream lineage (sl/pw blocks
     # become unreferenced); the memoized value is the k*queries-row result
-    out = picks.localCheckpoint(eager=True)
-    _MMR_CACHE.put(spark, sf_dir, (out,))
-    return out
+    return picks.localCheckpoint(eager=True)
 
 
 @query(

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .._memo import SessionMemo, memo_persist
+from .._memo import memo_persist
 from ..registry import query
 from ..sources import load_table, register_views
 
@@ -844,13 +844,6 @@ def sketch_theta_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (applicationId, sf_dir) -> persisted per-(type, bucket) bitmap table: it
-# feeds BOTH the per-type rollup and the OR-merged ALL row — without a
-# persist each consumer re-scans the fact (lesson 15). SessionMemo bounds
-# entries and unpersists on eviction.
-_BITMAP_CACHE = SessionMemo("sketches.bitmap_buckets")
-
-
 @query(
     "agg_bitmap_distinct_users",
     oracle="""
@@ -877,20 +870,23 @@ def agg_bitmap_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup grain above it (the 'ALL' row here) is a bitmap OR over those
     blocks, the same merge law the sketch family exploits, but lossless.
     """
-    cached = _BITMAP_CACHE.get(spark, sf_dir)
-    if cached is not None:
-        per_bucket = cached[0]
-    else:
-        e = load_table(spark, sf_dir, "events")
-        per_bucket = e.groupBy(
+    # the per-(type, bucket) bitmap table feeds BOTH the per-type rollup and
+    # the OR-merged ALL row — without a persist each consumer re-scans the
+    # fact (lesson 15)
+    e = load_table(spark, sf_dir, "events")
+    per_bucket = memo_persist(
+        "sketches.bitmap_buckets",
+        spark,
+        sf_dir,
+        lambda: e.groupBy(
             "event_type",
             F.expr("bitmap_bucket_number(user_id)").alias("bucket"),
         ).agg(
             F.expr("bitmap_construct_agg(bitmap_bit_position(user_id))").alias(
                 "bm"
             )
-        ).persist()
-        _BITMAP_CACHE.put(spark, sf_dir, (per_bucket,))
+        ),
+    )
     per_type = per_bucket.groupBy("event_type").agg(
         F.sum(F.expr("bitmap_count(bm)")).alias("n_distinct_users")
     )
@@ -901,11 +897,6 @@ def agg_bitmap_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.lit("ALL").alias("event_type"), "n_distinct_users")
     )
     return per_type.unionByName(merged_all)
-
-
-# (applicationId, sf_dir) -> persisted distinct Bloom bit positions of the
-# member set — the probe join and the set-bit census consume it.
-_BLOOM_BITS_CACHE = SessionMemo("sketches.bloom_bits")
 
 
 @query(
@@ -1002,7 +993,7 @@ def sketch_bloom_fpr_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the bit set feeds the probe join AND the n_bits census — persisted +
     # memoized (<= 16384 rows; lesson 27/30, scan_audit-found)
     bits = memo_persist(
-        _BLOOM_BITS_CACHE,
+        "sketches.bloom_bits",
         spark,
         sf_dir,
         lambda: pos(members).select("pos").distinct(),

@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .._memo import SessionMemo, memo_persist
+from .._memo import memo_persist, memoized
 from ..registry import query
 from ..sources import load_table
 
@@ -679,9 +679,35 @@ def stats_kruskal_wallis_acctbal(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (applicationId, sf_dir) -> persisted per-part (brand, cents, qty) rollup
-# for the Kendall pair join (both self-join sides consume it).
-_KENDALL_CACHE = SessionMemo("stats.kendall_pts")
+# per-part (brand, cents, qty) rollup for the Kendall pair join
+@memoized("stats.kendall_pts")
+def _kendall_pts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    l = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part")
+    sold = l.groupBy("l_partkey").agg(
+        F.sum(F.col("l_quantity").cast("bigint")).alias("qty")
+    )
+    # persisted: pts feeds BOTH sides of the within-brand pair join —
+    # unpersisted, the differing projections defeat ReusedExchange and
+    # the fact rollup runs twice (the ds_q64 finding, lesson 15)
+    return (
+        p.join(sold, F.col("l_partkey") == F.col("p_partkey"))
+        .select(
+            "p_brand",
+            "p_partkey",
+            _cents("p_retailprice").alias("pc"),
+            "qty",
+        )
+        # r14 (guide §2.5): the tau family's within-brand pair join
+        # streams this cache through a broadcast join — ~8M sign
+        # evaluations per rep ran at the cache's coalesced partition
+        # count; fan the build out once so the quadratic verify uses
+        # every core.
+        .repartition(
+            spark.sparkContext.defaultParallelism, "p_partkey"
+        )
+        .persist()
+    )
 
 
 @query(
@@ -727,37 +753,7 @@ def stats_kendall_tau_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(n log n) merge-inversion count per brand via a grouped sort when
     brands grow beyond ~10^4 parts).
     """
-    cached = _KENDALL_CACHE.get(spark, sf_dir)
-    if cached is not None:
-        pts = cached[0]
-    else:
-        l = load_table(spark, sf_dir, "lineitem")
-        p = load_table(spark, sf_dir, "part")
-        sold = l.groupBy("l_partkey").agg(
-            F.sum(F.col("l_quantity").cast("bigint")).alias("qty")
-        )
-        # persisted: pts feeds BOTH sides of the within-brand pair join —
-        # unpersisted, the differing projections defeat ReusedExchange and
-        # the fact rollup runs twice (the ds_q64 finding, lesson 15)
-        pts = (
-            p.join(sold, F.col("l_partkey") == F.col("p_partkey"))
-            .select(
-                "p_brand",
-                "p_partkey",
-                _cents("p_retailprice").alias("pc"),
-                "qty",
-            )
-            # r14 (guide §2.5): the tau family's within-brand pair join
-            # streams this cache through a broadcast join — ~8M sign
-            # evaluations per rep ran at the cache's coalesced partition
-            # count; fan the build out once so the quadratic verify uses
-            # every core.
-            .repartition(
-                spark.sparkContext.defaultParallelism, "p_partkey"
-            )
-            .persist()
-        )
-        _KENDALL_CACHE.put(spark, sf_dir, (pts,))
+    pts = _kendall_pts(spark, sf_dir)
     a = pts.select(
         F.col("p_brand").alias("brand"),
         F.col("p_partkey").alias("ka"),
@@ -2172,11 +2168,6 @@ def stats_nemenyi_posthoc_segments(
     )
 
 
-# (applicationId, sf_dir) -> persisted 25-cell (segment, priority) counts —
-# Theil's U marginals, total, and both entropy passes consume it.
-_THEILS_CELLS_CACHE = SessionMemo("stats.theils_cells")
-
-
 @query(
     "stats_theils_u_segment_priority",
     oracle="""
@@ -2239,7 +2230,7 @@ def stats_theils_u_segment_priority(
     # entropy passes — persisted + memoized or the fact-dim join re-runs
     # once per consumer (lesson 27/30, scan_audit-found)
     cells = memo_persist(
-        _THEILS_CELLS_CACHE,
+        "stats.theils_cells",
         spark,
         sf_dir,
         lambda: (
@@ -2827,11 +2818,6 @@ def stats_ansari_bradley_segments(
     )
 
 
-# (segment, day, revenue-cents) rollup shared by the runs-test's median
-# and sign passes
-_RUNS_DAILY_CACHE = SessionMemo("stats.runs_daily")
-
-
 @query(
     "stats_runs_above_median_by_segment",
     oracle="""
@@ -2913,7 +2899,7 @@ def stats_runs_above_median_by_segment(
     # (lesson 15); SessionMemo'd so warm bench reps don't pin fresh blocks
     # (lesson 30, r10 ADVICE item)
     daily = memo_persist(
-        _RUNS_DAILY_CACHE,
+        "stats.runs_daily",
         spark,
         sf_dir,
         lambda: (
@@ -3634,10 +3620,6 @@ def stats_quade_nation_segment(
     )
 
 
-# BUILDING/MACHINERY day-grain revenue shared by both HL pair-grid sides
-_HL_DAILY_CACHE = SessionMemo("stats.hl_daily")
-
-
 @query(
     "stats_hodges_lehmann_shift",
     oracle=f"""
@@ -3688,7 +3670,7 @@ def stats_hodges_lehmann_shift(
     # both pair-grid sides filter the SAME day-grain rollup: memoized or
     # the orders x customer join runs once per side (scan_audit/lesson 27)
     daily = memo_persist(
-        _HL_DAILY_CACHE,
+        "stats.hl_daily",
         spark,
         sf_dir,
         lambda: (
@@ -3976,34 +3958,7 @@ def stats_kendall_tau_b_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly as tau-a documents (merge-inversion per brand is the
     beyond-10^4-parts path); the tie counts are two tiny rollups.
     """
-    cached = _KENDALL_CACHE.get(spark, sf_dir)
-    if cached is not None:
-        pts = cached[0]
-    else:
-        l = load_table(spark, sf_dir, "lineitem")
-        p = load_table(spark, sf_dir, "part")
-        sold = l.groupBy("l_partkey").agg(
-            F.sum(F.col("l_quantity").cast("bigint")).alias("qty")
-        )
-        pts = (
-            p.join(sold, F.col("l_partkey") == F.col("p_partkey"))
-            .select(
-                "p_brand",
-                "p_partkey",
-                _cents("p_retailprice").alias("pc"),
-                "qty",
-            )
-            # r14 (guide §2.5): the tau family's within-brand pair join
-            # streams this cache through a broadcast join — ~8M sign
-            # evaluations per rep ran at the cache's coalesced partition
-            # count; fan the build out once so the quadratic verify uses
-            # every core.
-            .repartition(
-                spark.sparkContext.defaultParallelism, "p_partkey"
-            )
-            .persist()
-        )
-        _KENDALL_CACHE.put(spark, sf_dir, (pts,))
+    pts = _kendall_pts(spark, sf_dir)
     a = pts.select(
         F.col("p_brand").alias("brand"),
         F.col("p_partkey").alias("ka"),
@@ -4939,14 +4894,11 @@ def stats_brunner_munzel_segments(
 # only pays where per-task compute is substantial. (b) The same memo on the
 # orders-side grouped pair measured flat-to-worse (orders is 4x smaller) —
 # reverted; the grouped members keep their direct scans.
-_TP_CENTS_CACHE = SessionMemo("stats.twopass_cents")
-
-
 def _tp_lineitem_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return memo_persist(
-        _TP_CENTS_CACHE,
+        "stats.twopass_cents",
         spark,
-        (sf_dir, "li"),
+        sf_dir,
         lambda: load_table(spark, sf_dir, "lineitem")
         .select(
             F.round(F.col("l_extendedprice") * 100, 0)

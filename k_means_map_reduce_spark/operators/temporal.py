@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .._memo import SessionMemo, memo_persist
+from .._memo import memo_persist
 from ..registry import query
 from ..sources import load_table
 from ._util import dsum, sql_dsum
@@ -1337,11 +1337,6 @@ def timeseries_max_drawdown_daily(
     )
 
 
-# (applicationId, sf_dir) -> persisted (priority, epoch-day) cents rollup —
-# both sides of the seasonal-naive 7-day shift consume it.
-_SNAIVE_DAILY_CACHE = SessionMemo("temporal.snaive_daily")
-
-
 @query(
     "timeseries_seasonal_naive_error",
     oracle="""
@@ -1396,7 +1391,7 @@ def timeseries_seasonal_naive_error(
     # both sides of the 7-day-shift self-join consume the rollup —
     # persisted + memoized (lesson 27/30, scan_audit-found)
     daily = memo_persist(
-        _SNAIVE_DAILY_CACHE,
+        "temporal.snaive_daily",
         spark,
         sf_dir,
         lambda: o.groupBy(

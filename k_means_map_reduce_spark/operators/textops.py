@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .._memo import SessionMemo, memo_persist
+from .._memo import memo_persist, memoized
 from ..registry import query
 from ..sources import load_table
 from ..functions.text import (
@@ -267,25 +267,17 @@ WINNOW_CTE_SQL = f"""
 """
 
 
-# (applicationId, sf_dir) → persisted fingerprint frame. The rolling-hash
-# expression is the most expensive scan in the repo; memoizing per session
-# means the N queries that consume fingerprints (stats, pair dedup, tests,
-# repeated bench invocations) compute them once, and — unlike the previous
-# per-invocation .cache() — repeated calls don't stack new copies in
-# executor storage.
-_WINNOW_FPS_CACHE = SessionMemo("textops.winnow_fps")
-
-
+# Persisted fingerprint frame. The rolling-hash expression is the most
+# expensive scan in the repo; memoizing per session means the N queries that
+# consume fingerprints (stats, pair dedup, tests, repeated bench invocations)
+# compute them once, and — unlike the previous per-invocation .cache() —
+# repeated calls don't stack new copies in executor storage.
+@memoized("textops.winnow_fps")
 def winnow_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, fps: array<bigint>) — the distinct winnowing fingerprints of
     each document, persisted once per (session, sf_dir). See
     text_winnowing_fingerprints for the algorithm and the load-bearing
     repartition barrier."""
-    import os as _os
-
-    cached = _WINNOW_FPS_CACHE.get(spark, _os.path.abspath(sf_dir))
-    if cached is not None:
-        return cached
     d = load_table(spark, sf_dir, "documents")
     pows = ", ".join(f"{p}L" for p in _WIN_POWS)
     hs_from_t = f"""
@@ -301,7 +293,7 @@ def winnow_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
         "array_distinct(transform(sequence(1, size(hs) - 3),"
         " i -> array_min(slice(hs, i, 4))))"
     )
-    df = (
+    return (
         d.select(
             "doc_id",
             F.expr("lower(regexp_replace(trim(text), '\\\\s+', ' '))").alias("t"),
@@ -312,8 +304,6 @@ def winnow_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.expr(fps_from_hs).alias("fps"))
         .persist()
     )
-    _WINNOW_FPS_CACHE.put(spark, _os.path.abspath(sf_dir), df)
-    return df
 
 
 @query(
@@ -885,9 +875,6 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CHUNKS_CACHE = SessionMemo("textops.chunks")
-
-
 @query(
     "dedup_shared_chunk_fraction",
     oracle="""
@@ -941,8 +928,7 @@ def dedup_shared_chunk_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The chunk table is PERSISTED (session+dir memo): both consumers (the
     # inverted index and the per-doc rollup join side) otherwise re-run the
     # chunking HOF — measured 2.1s -> 0.9s warm at sf0.1.
-    chunks = _CHUNKS_CACHE.get(spark, sf_dir)
-    if chunks is None:
+    def build() -> DataFrame:
         d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
         d = d.repartition(spark.sparkContext.defaultParallelism)
         toks = F.filter(
@@ -953,15 +939,12 @@ def dedup_shared_chunk_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sequence(F.lit(0), n_full - 1),
             lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i * 8 + 1, 8))),
         )
-        chunks = (
-            d.select(
-                "doc_id",
-                F.when(n_full > 0, chunk_arr).otherwise(F.array()).alias("ch"),
-            )
-            .select("doc_id", F.posexplode("ch").alias("chunk_idx", "chunk_hash"))
-            .persist()
-        )
-        _CHUNKS_CACHE.put(spark, sf_dir, chunks)
+        return d.select(
+            "doc_id",
+            F.when(n_full > 0, chunk_arr).otherwise(F.array()).alias("ch"),
+        ).select("doc_id", F.posexplode("ch").alias("chunk_idx", "chunk_hash"))
+
+    chunks = memo_persist("textops.chunks", spark, sf_dir, build)
     shared = chunks.groupBy("chunk_hash").agg(
         F.countDistinct("doc_id").alias("n_docs")
     )
@@ -1331,9 +1314,6 @@ def text_token_length_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BM25_PERDOC_CACHE = SessionMemo("textops.bm25_per_doc")
-
-
 @query(
     "text_bm25_search",
     oracle=r"""
@@ -1406,16 +1386,18 @@ def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-expand the explode subtree each — filter pushdown differentiates
     # the subtrees, defeating exchange reuse (NEXT.md lesson 4; plan-
     # asserted: tests/test_plans.py::test_bm25_single_tokenize_pass).
-    per_doc = _BM25_PERDOC_CACHE.get(spark, sf_dir)
-    if per_doc is None:
-        per_doc = docs.groupBy("doc_id").agg(
+    per_doc = memo_persist(
+        "textops.bm25_per_doc",
+        spark,
+        sf_dir,
+        lambda: docs.groupBy("doc_id").agg(
             F.count(F.lit(1)).alias("dl"),
             *[
                 F.sum(F.when(F.col("term") == t, 1).otherwise(0)).alias(f"tf_{i}")
                 for i, t in enumerate(terms)
             ],
-        ).persist()
-        _BM25_PERDOC_CACHE.put(spark, sf_dir, per_doc)
+        ),
+    )
     stats = per_doc.agg(
         F.sum("dl").cast("double").alias("sum_dl"),
         F.count(F.lit(1)).cast("double").alias("nd"),
@@ -2092,11 +2074,6 @@ def text_oov_rate_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("oov_rate"),
     )
 
-# (applicationId, sf_dir) -> persisted corpus bigram count table — both the
-# smoothing constants (V, total) and the scoring join consume it; without
-# the persist each consumer re-runs the tokenize+explode pass (lesson 27).
-_BIGRAM_LM_CACHE = SessionMemo("textops.bigram_lm")
-
 
 @query(
     "text_bigram_perplexity",
@@ -2155,10 +2132,10 @@ def text_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream (broadcast-able until web scale, then a hash shuffle on bg)
     and reduces per doc.
     """
-    cached = _BIGRAM_LM_CACHE.get(spark, sf_dir)
-    if cached is not None:
-        model = cached[0]
-    else:
+    # the corpus bigram count table — both the smoothing constants (V, total)
+    # and the scoring join consume it; without the persist each consumer
+    # re-runs the tokenize+explode pass (lesson 27).
+    def build() -> DataFrame:
         d = load_table(spark, sf_dir, "documents")
         arr = F.filter(
             F.split(F.trim(F.lower("text")), r"\s+"), lambda t: t != ""
@@ -2172,8 +2149,9 @@ def text_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).otherwise(F.array().cast("array<string>"))
         bigr = d.select("doc_id", F.explode(bigrams).alias("bg"))
-        model = bigr.groupBy("bg").agg(F.count(F.lit(1)).alias("cnt")).persist()
-        _BIGRAM_LM_CACHE.put(spark, sf_dir, (model,))
+        return bigr.groupBy("bg").agg(F.count(F.lit(1)).alias("cnt"))
+
+    model = memo_persist("textops.bigram_lm", spark, sf_dir, build)
     # r14 (guide §2.5): the scoring tokenize+explode re-runs per rep off
     # the single-row-group documents scan — one task for the whole bigram
     # stream; fan it out (the winnowing/simhash precedent).
@@ -2790,14 +2768,6 @@ def text_bigram_entropy_rate_by_lang(
     )
 
 
-# (applicationId, sf_dir) -> persisted (doc, true_lang, token, count)
-# rollup — the NB model tables and the scoring join all consume it.
-# five entries per sf_dir (token rollup, class_counts, doc_tot, and since
-# r14 the langs/delta model tables) — size 12 keeps two SFs resident so the
-# parity tests' sf0.01+sf0.001 passes don't thrash the memo
-_NB_TOKS_CACHE = SessionMemo("textops.nb_doc_tokens", maxsize=12)
-
-
 @query(
     "ml_naive_bayes_lang_confusion",
     oracle="""
@@ -2903,7 +2873,7 @@ def ml_naive_bayes_lang_confusion(
     # AND the scoring join — persisted + memoized or the tokenize+explode
     # pass re-runs once per consumer (lesson 27/30, scan_audit-found)
     toks = memo_persist(
-        _NB_TOKS_CACHE,
+        "textops.nb_doc_tokens",
         spark,
         sf_dir,
         lambda: (
@@ -2919,17 +2889,17 @@ def ml_naive_bayes_lang_confusion(
     # vocab derives from class_counts (vocabulary-scale) and per-class doc
     # counts from doc_tot (doc-scale) — same values, smaller inputs.
     class_counts = memo_persist(
-        _NB_TOKS_CACHE,
+        "textops.nb_class_counts",
         spark,
-        (sf_dir, "class_counts"),
+        sf_dir,
         lambda: toks.groupBy(F.col("true_lang").alias("lang"), "tok").agg(
             F.sum("c").cast("bigint").alias("cnt")
         ),
     )
     doc_tot = memo_persist(
-        _NB_TOKS_CACHE,
+        "textops.nb_doc_tot",
         spark,
-        (sf_dir, "doc_tot"),
+        sf_dir,
         lambda: toks.groupBy("doc_id", "true_lang").agg(
             F.sum("c").cast("bigint").alias("t_d")
         ),
@@ -2955,9 +2925,9 @@ def ml_naive_bayes_lang_confusion(
     # (5 and |V|x5 rows), deterministic per sf_dir, and now memo_persist'd
     # beside the class_counts/doc_tot rollups they derive from.
     langs = memo_persist(
-        _NB_TOKS_CACHE,
+        "textops.nb_langs",
         spark,
-        (sf_dir, "nb_langs"),
+        sf_dir,
         lambda: (
             class_tot.join(
                 doc_counts, F.col("lang") == F.col("lang_d")
@@ -3007,9 +2977,9 @@ def ml_naive_bayes_lang_confusion(
     # actually holding the token), and the 5-way scaffold lives at DOC
     # grain, not token grain.
     delta = memo_persist(
-        _NB_TOKS_CACHE,
+        "textops.nb_delta",
         spark,
-        (sf_dir, "nb_delta"),
+        sf_dir,
         lambda: logps.join(
             langs.select(F.col("lang").alias("_dl"), "default_logp"),
             F.col("lang") == F.col("_dl"),

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .._memo import SessionMemo, memo_persist
+from .._memo import memo_persist, memoized
 from ..registry import query
 from ..sources import load_table
 from ._util import davg, dsum, sql_davg, sql_dsum
@@ -452,35 +452,18 @@ def ds_rollup_topn_by_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (applicationId, sf_dir) -> persisted (part, customer, year) sales rollup:
-# it feeds BOTH sides of q64's year-over-year self-join (lesson 15 — the
-# differing projections defeat ReusedExchange, so unpersisted it costs two
-# full fact scans). SessionMemo bounds entries and unpersists on eviction.
-_Q64_CACHE = SessionMemo("tpcds.q64_sales")
-
-# (applicationId, sf_dir) -> persisted 5-column (cust, brand, date, flag,
-# qty) fact projection — ds_q25's three stage rollups AND ds_q29's
-# quantity chain consume it; warm bench reps must reuse one bounded entry,
-# not pin a new block per call (round-9 verdict advisory / lesson 30).
-_Q25_CACHE = SessionMemo("tpcds.q25_base")
-
-# (applicationId, sf_dir) -> persisted per-customer-year two-channel rollup
-# (ds_q11) and per-customer-month cents rollup (ds_q54) — each feeds both
-# sides of its self-join.
-_Q11_YEARLY_CACHE = SessionMemo("tpcds.q11_yearly")
-_Q54_MONTHLY_CACHE = SessionMemo("tpcds.q54_monthly")
-
-
+# persisted 5-column (cust, brand, date, flag, qty) fact projection —
+# ds_q25's three stage rollups AND ds_q29's quantity chain consume it; warm
+# bench reps must reuse one bounded entry, not pin a new block per call
+# (round-9 verdict advisory / lesson 30).
+@memoized("tpcds.q25_base")
 def _q25_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shared sold/returned/re-sold chain fact: one persisted 5-column
     projection of lineitem x orders x part at (customer, brand) grain."""
-    hit = _Q25_CACHE.get(spark, sf_dir)
-    if hit is not None:
-        return hit[0]
     l = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
     p = load_table(spark, sf_dir, "part")
-    base = (
+    return (
         l.join(o, F.col("o_orderkey") == F.col("l_orderkey"))
         .join(p, F.col("p_partkey") == F.col("l_partkey"))
         .select(
@@ -504,8 +487,6 @@ def _q25_base(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition("c", "p")
         .persist()
     )
-    _Q25_CACHE.put(spark, sf_dir, (base,))
-    return base
 
 
 @query(
@@ -566,22 +547,20 @@ def ds_q64_repeat_channel_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
     n = load_table(spark, sf_dir, "nation")
     net = F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")), 6)
-    cached = _Q64_CACHE.get(spark, sf_dir)
-    if cached is not None:
-        sales = cached[0]
-    else:
-        sales = (
-            l.join(o, F.col("o_orderkey") == F.col("l_orderkey"))
-            .groupBy(
-                "l_partkey", "o_custkey", F.year("o_orderdate").alias("yr")
-            )
-            .agg(
-                F.sum(net.cast("decimal(18,6)")).cast("double").alias("net"),
-                F.count(F.lit(1)).alias("n_lines"),
-            )
-            .persist()
-        )
-        _Q64_CACHE.put(spark, sf_dir, (sales,))
+    # the (part, customer, year) sales rollup feeds BOTH sides of q64's
+    # year-over-year self-join (lesson 15 — the differing projections defeat
+    # ReusedExchange, so unpersisted it costs two full fact scans)
+    sales = memo_persist(
+        "tpcds.q64_sales",
+        spark,
+        sf_dir,
+        lambda: l.join(o, F.col("o_orderkey") == F.col("l_orderkey"))
+        .groupBy("l_partkey", "o_custkey", F.year("o_orderdate").alias("yr"))
+        .agg(
+            F.sum(net.cast("decimal(18,6)")).cast("double").alias("net"),
+            F.count(F.lit(1)).alias("n_lines"),
+        ),
+    )
     s1 = sales.alias("s1")
     s2 = sales.select(
         F.col("l_partkey").alias("pk2"),
@@ -2421,7 +2400,7 @@ def ds_q11_two_channel_yoy_winners(
     # both self-join sides consume the rollup — persisted + memoized
     # (lesson 27/30, scan_audit-found)
     yearly = memo_persist(
-        _Q11_YEARLY_CACHE,
+        "tpcds.q11_yearly",
         spark,
         sf_dir,
         lambda: o.groupBy(
@@ -2580,7 +2559,7 @@ def ds_q54_post_anchor_revenue_bands(
     # anchors and the window join both consume the rollup — persisted +
     # memoized (lesson 27/30, scan_audit-found)
     monthly = memo_persist(
-        _Q54_MONTHLY_CACHE,
+        "tpcds.q54_monthly",
         spark,
         sf_dir,
         lambda: o.groupBy(F.col("o_custkey").alias("ck"), mi).agg(

@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .._memo import SessionMemo, memo_persist
+from .._memo import memo_persist
 from ..registry import query
 from ..sources import load_table
 
@@ -1428,12 +1428,6 @@ def drift_psi_totalprice_train_test(spark: SparkSession, sf_dir: str) -> DataFra
 _DSIR_BUCKETS = 4096  # hashed-bigram feature space (DSIR's n-gram buckets)
 
 
-# (applicationId, sf_dir) -> persisted (doc, lang, bucket, n) DSIR feature
-# rollup: bucket totals AND the weight join both consume it (one tokenize+
-# explode pass instead of two). SessionMemo unpersists on eviction.
-_DSIR_CACHE = SessionMemo("training.dsir_docb")
-
-
 @query(
     "training_dsir_importance_weights",
     oracle=f"""
@@ -1503,10 +1497,7 @@ def training_dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFr
     the raw bigram stream; at cluster scale materialize this rollup to
     parquet instead of executor storage).
     """
-    cached = _DSIR_CACHE.get(spark, sf_dir)
-    if cached is not None:
-        docb = cached[0]
-    else:
+    def build() -> DataFrame:
         d = load_table(spark, sf_dir, "documents")
         toks = F.filter(F.split(_NORM(F.col("text")), " "), lambda t: t != "")
         base = d.select("doc_id", "lang", toks.alias("toks")).where(
@@ -1529,12 +1520,9 @@ def training_dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFr
             F.explode(F.sequence(F.lit(1), F.size("toks") - 1)).alias("i"),
             "toks",
         ).select("doc_id", "lang", bucket.alias("b"))
-        docb = (
-            bg.groupBy("doc_id", "lang", "b")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .persist()
-        )
-        _DSIR_CACHE.put(spark, sf_dir, (docb,))
+        return bg.groupBy("doc_id", "lang", "b").agg(F.count(F.lit(1)).alias("n"))
+
+    docb = memo_persist("training.dsir_docb", spark, sf_dir, build)
     # bucket totals derive from the rollup (sum of per-doc multiplicities
     # == raw bigram counts), so the exploded stream is never re-read
     cnts = docb.groupBy("b").agg(
@@ -1683,11 +1671,6 @@ def contamination_13gram_scorecard(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-# (applicationId, sf_dir) -> persisted unigram-LM vocab for the perplexity
-# mixture (corpus total + scoring join both consume it).
-_PPL_VOCAB_CACHE = SessionMemo("training.ppl_vocab")
-
-
 @query(
     "training_perplexity_mixture",
     oracle=f"""
@@ -1748,17 +1731,17 @@ def training_perplexity_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     toks_arr = F.filter(F.split(F.trim(F.lower("text")), r"\s+"), lambda t: t != "")
     toks = d.select("doc_id", F.explode(toks_arr).alias("tok"))
-    cached = _PPL_VOCAB_CACHE.get(spark, sf_dir)
-    if cached is not None:
-        vocab = cached[0]
-    else:
-        # persisted: the LM vocab (Heaps-law small) is consumed by the
-        # corpus total AND the scoring join — unpersisted, EACH consumer
-        # re-runs the tokenize+explode+agg subtree (scan-audit finding,
-        # lesson 27). This is also the scale-correct persist target: the
-        # vocab stays broadcastable while the token stream never would.
-        vocab = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt")).persist()
-        _PPL_VOCAB_CACHE.put(spark, sf_dir, (vocab,))
+    # persisted: the LM vocab (Heaps-law small) is consumed by the
+    # corpus total AND the scoring join — unpersisted, EACH consumer
+    # re-runs the tokenize+explode+agg subtree (scan-audit finding,
+    # lesson 27). This is also the scale-correct persist target: the
+    # vocab stays broadcastable while the token stream never would.
+    vocab = memo_persist(
+        "training.ppl_vocab",
+        spark,
+        sf_dir,
+        lambda: toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt")),
+    )
     total = vocab.agg(F.sum("cnt").cast("long").alias("n_total"))
     scored = (
         toks.join(vocab, "tok")
@@ -1810,11 +1793,6 @@ def training_perplexity_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .drop("all_toks")
     )
-
-
-# (applicationId, sf_dir) -> persisted distinct (doc, lang, 5-gram md5)
-# postings — the rare-fingerprint filter and both pair sides consume it.
-_XLING_GRAMS_CACHE = SessionMemo("training.xling_grams")
 
 
 @query(
@@ -1877,7 +1855,7 @@ def contamination_crosslingual_fingerprints(
     # grams feeds the fingerprint df filter AND both pair-join sides —
     # persisted + memoized (lesson 27/30, scan_audit-found)
     grams = memo_persist(
-        _XLING_GRAMS_CACHE,
+        "training.xling_grams",
         spark,
         sf_dir,
         lambda: (
@@ -1900,9 +1878,9 @@ def contamination_crosslingual_fingerprints(
     # ~2M-row gram cache) is deterministic per sf_dir and was re-aggregated
     # every invocation — memoized beside the gram cache it derives from.
     fp = memo_persist(
-        _XLING_GRAMS_CACHE,
+        "training.xling_fp",
         spark,
-        (sf_dir, "fp"),
+        sf_dir,
         lambda: (
             grams.groupBy("g")
             .agg(

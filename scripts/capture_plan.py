@@ -34,7 +34,7 @@ USAGE = (
 
 
 def main() -> None:
-    if len(sys.argv) < 3:
+    if len(sys.argv) < 3 or (sys.argv[2] == "--file" and len(sys.argv) != 4):
         print(USAGE, file=sys.stderr)
         sys.exit(1)
     suffix = sys.argv[1]

@@ -63,7 +63,8 @@ _SMOKE_PARAMS = {
 # r14 (verdict item 1): the full suite outgrew the driver's verify budget
 # (r13: tests_ok=false, output truncated at ~96% with zero failures — pure
 # runtime). Tests with call time > ~8 s on the r14 box are tiered out of the
-# DEFAULT run (pytest.ini addopts = -m "not parity and not slow"); the full
+# DEFAULT run (pytest.ini addopts = -m "(not parity and not slow) or
+# parity_sample"); the full
 # sweep (including these and the oracle-parity battery) stays the builder's
 # pre-commit gate: python -m pytest tests/ -q -m "slow or not slow".
 _SLOW = {

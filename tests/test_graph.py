@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from k_means_map_reduce_spark.operators.graph import (
@@ -36,3 +37,27 @@ def test_pagerank_query_shape_and_determinism(spark, sf_dir):
     }
     assert {r["entity"] for r in rows1} == {"part", "supplier"}
     assert all(r["rank"] > 0 for r in rows1)
+
+
+def test_ktruss_releases_pins_when_a_step_raises(spark, sf_dir, monkeypatch):
+    """The k-truss peel pins its wave/dec frames; a step that raises after
+    the first pin must still leave no pinned storage behind."""
+    from k_means_map_reduce_spark._memo import named_memo
+    from k_means_map_reduce_spark.operators import graph
+
+    named_memo("graph.ktruss").clear()  # a memo hit would skip the peel
+    graph._edge_support_full(spark, sf_dir)  # memoized input, built outside
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    pinned_at_raise = []
+
+    def boom(*_args):
+        pinned_at_raise.append(jsc.getPersistentRDDs().size())
+        raise RuntimeError("injected k-truss step failure")
+
+    monkeypatch.setattr(graph, "_full_triangle_list", boom)
+    with pytest.raises(RuntimeError, match="injected"):
+        graph.graph_ktruss_edges(spark, sf_dir)
+    assert pinned_at_raise == [before + 1]  # the first wave was pinned
+    assert jsc.getPersistentRDDs().size() == before
+

@@ -271,14 +271,22 @@ def test_points_txt_python_datasource_matches_expression_reader(spark, tmp_path)
     assert a == b and len(a) == 201
 
 
-def test_points_txt_python_datasource_reads_reference_file(spark):
+def test_points_txt_python_datasource_reads_reference_file(spark, tmp_path):
+    """A file in the reference input format (one 2-D point per line, "x, y")
+    reads the same through the Python DataSource as through the declarative
+    reader."""
     from k_means_map_reduce_spark.sources.points_datasource import register
     from k_means_map_reduce_spark.sources.points_txt import read_points_txt
 
-    ref = "/root/reference/Data/Input/points.txt"
+    ref = str(tmp_path / "points.txt")
+    with open(ref, "w") as f:
+        for i in range(60):
+            f.write(f"{i * 0.37 - 9:.4f}, {i * 7919 % 101 / 3:.4f}\n")
     register(spark)
     via_ds = spark.read.format("points_txt").load(ref)
-    assert via_ds.count() == read_points_txt(spark, ref).count()
+    a = sorted(tuple(r["coordinates"]) for r in via_ds.collect())
+    b = sorted(tuple(r["coordinates"]) for r in read_points_txt(spark, ref).collect())
+    assert a == b and len(a) == 60 and all(len(p) == 2 for p in a)
 
 
 def test_driver_rotation_ordering(tmp_path, monkeypatch):

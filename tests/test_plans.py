@@ -8,6 +8,10 @@
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -572,3 +576,22 @@ def test_geo_proximity_joins_on_raw_cell_columns(spark, sf_dir):
     (shiftleft) must not appear anywhere in the plan."""
     r = plan_report(QUERIES["geo_grid_proximity_join"](spark, sf_dir))
     assert "shiftleft" not in r.text, "Morton key leaked back into the join"
+
+
+def test_capture_plan_file_without_listfile_prints_usage():
+    """`--file` with no LISTFILE is a usage error, not an IndexError."""
+    script = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "scripts",
+        "capture_plan.py",
+    )
+    r = subprocess.run(
+        [sys.executable, script, "after", "--file"],
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert r.returncode == 1, r.stderr[-2000:]
+    assert r.stderr.startswith("usage: python scripts/capture_plan.py SUFFIX")
+    assert "--file LISTFILE" in r.stderr
+
