@@ -1,14 +1,24 @@
 """K-Means: the reference engine's entire query surface, Spark-first.
 
-Two implementations:
+Three engines, one Lloyd loop:
 
-1. ``kmeans_mllib`` — delegate the whole loop to ``pyspark.ml.clustering.KMeans``
-   (Lloyd's + k-means|| init, squared-distance, tol-based early stop). This is
-   what a production 100 TB job should use.
+1. ``kmeans_mllib`` — delegate the whole fit to ``pyspark.ml.clustering.KMeans``
+   (Lloyd's + k-means|| init, squared-distance, tol-based early stop).
 
 2. ``kmeans_native`` — a transparent DataFrame-native Lloyd's loop that
    re-expresses every operator of the reference's MapReduce dataflow
-   (SURVEY.md §2a ops #5-#17) with Catalyst-optimizable expressions:
+   (SURVEY.md §2a ops #5-#17) with Catalyst-optimizable expressions.
+
+3. ``kmeans_arrow`` — the same loop with blocked-numpy (BLAS) assignment;
+   one executor task for inputs that fit it, a per-iteration treeAggregate
+   over cached blocks otherwise.
+
+Native and Arrow differ only in their map + reduce step: each turns the
+current centroids into per-cluster ``(count, Σvec, Σdist²)`` arrays, and
+``_lloyd`` — the one driver-side loop — turns those into new centroids, the
+WSSSE history and the convergence test. The streaming engine
+(``streaming/kmeans_stream.py``) reuses the native step's aggregate and the
+seeded init.
 
    reference (file:line)                          → here
    ---------------------------------------------- → ----------------------------
@@ -21,8 +31,10 @@ Two implementations:
                                                     (broadcast, zero shuffle)
    hash partition by cid % R (mapper.py:32-38)    → Spark hash shuffle (implicit)
    group-by-key (reducer.py:58-61)                → ``groupBy("cid")``
-   per-group vector mean (reducer.py:19-30)       → per-dimension ``avg`` with
-                                                    map-side partial aggregation
+   per-group vector mean (reducer.py:19-30)       → per-dimension ``sum`` + count
+                                                    with map-side partial
+                                                    aggregation; the division
+                                                    happens in ``_lloyd``
    gather (master.py:238-247)                     → ``collect()`` of k×dim rows
    convergence ε=1e-6 (master.py:97-103)          → max centroid shift, joined
                                                     BY ID (fixes the reference's
@@ -36,19 +48,17 @@ Two implementations:
    - Ties broken deterministically toward the lowest centroid id (reference
      keeps first-in-iteration-order, mapper.py:64 — same outcome).
 
-Scale notes: the per-iteration plan is scan(cached) → project(argmin expr) →
-partial agg → single k×dim shuffle → final agg → collect(k rows). No cross
-join, no window, no Python on the hot path. Centroids ride into executors as
-a code-generated literal array (fine for k·dim ≤ ~64k; beyond that, swap the
-literal for a broadcast join — interface unchanged).
+Scale notes: the native per-iteration plan is scan(cached) → project(argmin
+expr) → partial agg → single k×(dim+2) shuffle → final agg → collect(k rows).
+No cross join, no window, no Python on the hot path. Centroids ride into
+executors as a code-generated literal array, whose size grows with k·dim.
 """
 
 from __future__ import annotations
 
-import math
-import os
 from dataclasses import dataclass, field
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -105,24 +115,59 @@ def assign_clusters(
     return df.withColumn("cid", best["cid"]).withColumn("dist2", best["dist2"])
 
 
-def _mean_by_cluster(assigned: DataFrame, dim: int) -> list[tuple[int, int, list[float], float]]:
-    """groupBy(cid) → per-dimension avg + count + sum(dist2); single shuffle.
+def _cluster_sums(
+    assigned: DataFrame, k: int, dim: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """groupBy(cid) → per-cluster (count, Σvec, Σdist²) arrays; one shuffle.
 
-    Returns [(cid, n, mean_vec, sum_dist2)]. Catalyst plans this as partial
-    (map-side) + final aggregation: the shuffle carries k×(dim+2) partials per
-    input partition, not data rows — the same asymptotics as the reference's
-    combiner-less reducer, minus the materialized partition files
-    (/root/reference/mapper.py:72-84).
+    Catalyst plans this as partial (map-side) + final aggregation: the
+    shuffle carries k×(dim+2) partials per input partition, not data rows —
+    the same asymptotics as the reference's combiner-less reducer, minus the
+    materialized partition files (/root/reference/mapper.py:72-84). Clusters
+    with no rows keep count 0.
     """
-    aggs = [F.count(F.lit(1)).alias("n"), F.sum("dist2").alias("sum_dist2")]
+    aggs = [F.count(F.lit(1)).alias("n"), F.sum("dist2").alias("sd")]
     aggs += [
-        F.avg(F.element_at(F.col("vec"), i + 1)).alias(f"m{i}") for i in range(dim)
+        F.sum(F.element_at(F.col("vec"), i + 1)).alias(f"s{i}") for i in range(dim)
     ]
-    rows = assigned.groupBy("cid").agg(*aggs).collect()
-    return [
-        (r["cid"], r["n"], [r[f"m{i}"] for i in range(dim)], r["sum_dist2"])
-        for r in rows
-    ]
+    cnt = np.zeros(k, dtype=np.int64)
+    sums = np.zeros((k, dim), dtype=np.float64)
+    sd = np.zeros(k, dtype=np.float64)
+    for r in assigned.groupBy("cid").agg(*aggs).collect():
+        cid = r["cid"]
+        cnt[cid], sd[cid] = r["n"], r["sd"]
+        sums[cid] = [r[f"s{i}"] for i in range(dim)]
+    return cnt, sums, sd
+
+
+def _lloyd(step, centroids, max_iter: int, tol: float) -> KMeansResult:
+    """Lloyd's loop on the driver (reference master.start, master.py:106-159).
+
+    ``step(C)`` is one map + reduce pass: it assigns every point to its
+    nearest row of the k×dim matrix ``C`` and returns per-cluster
+    ``(count, Σvec, Σdist²)`` arrays. This loop owns everything else: the
+    mean update (empty clusters keep their previous centroid), the WSSSE
+    history, and convergence (reference op #15, paired by id): every
+    centroid moved < tol in Euclidean distance.
+    """
+    C = np.asarray(centroids, dtype=np.float64)
+    wssse_history: list[float] = []
+    sizes: dict[int, int] = {}
+    converged = False
+    it = 0
+    for it in range(1, max_iter + 1):
+        cnt, sums, sd = step(C)
+        wssse_history.append(float(sd.sum()))
+        new_c = C.copy()
+        nz = cnt > 0
+        new_c[nz] = sums[nz] / cnt[nz, None]
+        shift = float(np.sqrt(((new_c - C) ** 2).sum(axis=1)).max())
+        C = new_c
+        sizes = {cid: int(n) for cid, n in enumerate(cnt)}
+        if shift < tol:
+            converged = True
+            break
+    return KMeansResult(C.tolist(), it, converged, wssse_history, sizes)
 
 
 def _init_random(pts: DataFrame, k: int, seed: int) -> list[list[float]]:
@@ -285,46 +330,27 @@ def kmeans_native(
     """DataFrame-native Lloyd's loop (reference master.start, master.py:106-159).
 
     init: "random" (the reference's seeded sample) or "k||" (k-means||,
-    MLlib's default init, re-expressed with DataFrame ops)."""
+    MLlib's default init, re-expressed with DataFrame ops). Each iteration's
+    step is the codegen argmin (``assign_clusters``) plus ``_cluster_sums``."""
     pts = (
         df.select(F.col(vec_col).cast("array<double>").alias("vec"))
         .where(F.col("vec").isNotNull() & (F.size("vec") > 0))
         .cache()
     )
-
-    if init == "k||":
-        centroids = _init_kmeans_parallel(pts, k, seed, rounds=init_rounds)
-    elif init == "random":
-        centroids = _init_random(pts, k, seed)
-    else:
-        raise ValueError(f"unknown init {init!r}")
-    dim = len(centroids[0])
-
-    wssse_history: list[float] = []
-    converged = False
-    it = 0
-    sizes: dict[int, int] = {}
-    for it in range(1, max_iter + 1):
-        assigned = assign_clusters(pts, centroids, "vec")
-        stats = _mean_by_cluster(assigned, dim)
-        new_centroids = list(centroids)  # empty clusters keep old centroid
-        sizes = {cid: 0 for cid in range(k)}
-        for cid, n, mean_vec, _sd in stats:
-            new_centroids[cid] = mean_vec
-            sizes[cid] = n
-        wssse_history.append(sum(s[3] for s in stats))
-        # Convergence (reference op #15, fixed to pair by id): every centroid
-        # moved < tol in Euclidean distance.
-        shift = max(
-            math.sqrt(sum((a - b) ** 2 for a, b in zip(old, new)))
-            for old, new in zip(centroids, new_centroids)
+    try:
+        if init == "k||":
+            centroids = _init_kmeans_parallel(pts, k, seed, rounds=init_rounds)
+        elif init == "random":
+            centroids = _init_random(pts, k, seed)
+        else:
+            raise ValueError(f"unknown init {init!r}")
+        dim = len(centroids[0])
+        return _lloyd(
+            lambda C: _cluster_sums(assign_clusters(pts, C, "vec"), k, dim),
+            centroids, max_iter, tol,
         )
-        centroids = new_centroids
-        if shift < tol:
-            converged = True
-            break
-    pts.unpersist()
-    return KMeansResult(centroids, it, converged, wssse_history, sizes)
+    finally:
+        pts.unpersist()
 
 
 def kmeans_native_df(
@@ -394,12 +420,11 @@ def kmeans_mllib(
 def _lloyd_kernel(X, C):
     """One Lloyd assignment pass over a dense block: (cnt, Σvec, Σdist²).
 
-    Shared by both kmeans_arrow physical paths so their math is identical:
-    |x|²+|c|²-2XCᵀ distances (BLAS matmul), argmin with first-occurrence =
-    lowest-cid tie-break, dist² clamped at 0 against fp cancellation.
+    The step of both kmeans_arrow physical paths, so their math is
+    identical: |x|²+|c|²-2XCᵀ distances (BLAS matmul), argmin with
+    first-occurrence = lowest-cid tie-break, dist² clamped at 0 against fp
+    cancellation.
     """
-    import numpy as np
-
     c_sq = (C * C).sum(axis=1)
     d2 = (X * X).sum(axis=1)[:, None] + c_sq[None, :] - 2.0 * (X @ C.T)
     cid = d2.argmin(axis=1)  # first occurrence = lowest cid on ties
@@ -444,36 +469,9 @@ def _take_sample_local(rows, num, seed):
     return samples[0:num]
 
 
-def _lloyd_single(X, C, max_iter, tol):
-    """Full Lloyd loop over one in-memory block (the single-task path).
-
-    Runs INSIDE an executor task via mapPartitions — the data never visits
-    the driver. Returns plain picklable types.
-    """
-    import numpy as np
-
-    wssse_history: list[float] = []
-    cnt = np.zeros(C.shape[0], dtype=np.int64)
-    converged = False
-    it = 0
-    for it in range(1, max_iter + 1):
-        cnt, sums, sd = _lloyd_kernel(X, C)
-        wssse_history.append(float(sd.sum()))
-        new_c = C.copy()
-        nz = cnt > 0
-        new_c[nz] = sums[nz] / cnt[nz, None]
-        shift = float(np.sqrt(((new_c - C) ** 2).sum(axis=1)).max())
-        C = new_c
-        if shift < tol:
-            converged = True
-            break
-    return (
-        [[float(x) for x in row] for row in C],
-        it,
-        converged,
-        wssse_history,
-        [int(n) for n in cnt],
-    )
+# Dense inputs up to this many bytes (by plan statistics) run kmeans_arrow's
+# whole loop inside one executor task.
+_LOCAL_BYTES = 64 * 1024 * 1024
 
 
 def kmeans_arrow(
@@ -489,22 +487,24 @@ def kmeans_arrow(
     Same semantics as kmeans_native (seeded init, empty-cluster retention,
     lowest-cid tie-break via argmin-first-occurrence, tol convergence), with
     an adaptive physical strategy — the same decision Catalyst makes between
-    broadcast and shuffle joins, applied to an iterative job:
+    broadcast and shuffle joins, applied to an iterative job. Two paths,
+    chosen from Catalyst plan statistics:
 
-    - dense size ≤ SPARK_GRAFT_KMEANS_LOCAL_BYTES (default 64 MB): the whole
-      loop runs INSIDE one executor task over the coalesced block — ONE Spark
-      job for all iterations instead of one per iteration. An iterative
-      driver loop over a 1 MB input pays ~250 ms of job-scheduling floor per
-      iteration for microseconds of math; running the loop where the data is
-      removes that floor entirely. (Data never lands on the driver — this is
-      mapPartitions, not collect; precedent: MLlib runs LocalKMeans for the
-      k-means|| refine the same way, clustering/LocalKMeans.scala.)
-    - larger inputs: per-iteration treeAggregate over a cached RDD of dense
-      per-partition matrices:
+    - estimated size ≤ ``_LOCAL_BYTES`` (64 MB): the whole loop runs INSIDE
+      one executor task over the coalesced block — ONE Spark job for all
+      iterations instead of one per iteration. An iterative driver loop over
+      a 1 MB input pays ~250 ms of job-scheduling floor per iteration for
+      microseconds of math; running the loop where the data is removes that
+      floor entirely. (Data never lands on the driver — this is mapInArrow,
+      not collect; precedent: MLlib runs LocalKMeans for the k-means|| refine
+      the same way, clustering/LocalKMeans.scala.)
+    - larger or unknown sizes, and inputs whose 4k-row init oversample holds
+      fewer than k distinct vectors: per-iteration treeAggregate over a
+      cached RDD of dense per-partition matrices:
 
         executors: cached numpy block → |x|²+|c|²-2XCᵀ argmin (BLAS)
                    → (count, Σvec, Σdist²) partials, tree-combined
-        driver:    merge combined partials, update centroids, test shift.
+        driver:    ``_lloyd`` updates centroids and tests the shift.
 
     Why this beats the expression-tree loop at any scale: no Catalyst
     re-analysis or re-codegen per iteration (the blocks never change — only
@@ -514,23 +514,18 @@ def kmeans_arrow(
     own RDD loop shape (clustering/KMeans.scala: broadcast centers +
     treeAggregate over cached vector blocks), reproduced in numpy.
 
-    Both paths share one iteration kernel (`_lloyd_kernel`), so they agree
-    to float-associativity (tested: test_arrow_equals_native).
+    Both paths run ``_lloyd`` with ``_lloyd_kernel`` as the step, so they
+    agree to float-associativity (tested: test_arrow_equals_native).
     """
-    import numpy as np
-
     spark = df.sparkSession
     base = df.select(F.col(vec_col).cast("array<double>").alias("vec")).where(
         F.col("vec").isNotNull() & (F.size("vec") > 0)
     )
 
-    local_bytes = int(
-        os.environ.get("SPARK_GRAFT_KMEANS_LOCAL_BYTES", str(64 * 1024 * 1024))
-    )
     # Size the input from Catalyst plan statistics — no job spent; this is
     # the same estimate autoBroadcastJoinThreshold uses to pick broadcast
     # joins. Unknown stats (non-file plans) report Long.Max and route to the
-    # distributed path, which then counts exactly.
+    # distributed path.
     try:
         est_bytes = int(
             base._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
@@ -538,21 +533,19 @@ def kmeans_arrow(
     except Exception:
         est_bytes = None
 
-    if est_bytes is not None and est_bytes <= local_bytes:
+    if est_bytes is not None and est_bytes <= _LOCAL_BYTES:
         # ONE-JOB fast path: sample-init AND the full loop run inside a
         # single executor task over the coalesced data. The init replays
         # pyspark's own takeSample machinery at split=0, so the trajectory
         # is identical to the driver-side init below. See docstring.
         #
-        # r14 (guide §4): the handoff is mapInArrow — vectors cross the
-        # JVM→Python boundary as Arrow list<double> batches instead of
-        # pickled Rows. Row ORDER is unchanged (same single coalesced
-        # partition, batches concatenated in order), and Arrow transports
+        # The handoff is mapInArrow — vectors cross the JVM→Python boundary
+        # as Arrow list<double> batches instead of pickled Rows. Row ORDER
+        # is that of the single coalesced partition, and Arrow transports
         # doubles exactly, so the seeded sample — and therefore the whole
-        # trajectory — is bit-identical to the .rdd handoff it replaces
-        # (gated by test_arrow_equals_native).
+        # trajectory — matches the driver-side path (gated by
+        # test_arrow_single_task_equals_distributed).
         def run_all(batch_iter, _k=k, _mi=max_iter, _tol=tol, _seed=seed):
-            import numpy as _np
             import pyarrow as _pa
 
             out_schema = _pa.schema(
@@ -589,13 +582,12 @@ def kmeans_arrow(
                     schema=out_schema,
                 )
                 return
-            X = _np.asarray(vecs, dtype=_np.float64)
-            final_c, it, converged, hist, cnt = _lloyd_single(
-                X, _np.asarray(cents, dtype=_np.float64), _mi, _tol
-            )
+            X = np.asarray(vecs, dtype=np.float64)
+            r = _lloyd(lambda C: _lloyd_kernel(X, C), cents, _mi, _tol)
             yield _pa.RecordBatch.from_pylist(
-                [{"status": "ok", "cents": final_c, "it": it,
-                  "converged": converged, "wssse": hist, "cnt": cnt}],
+                [{"status": "ok", "cents": r.centers, "it": r.iterations,
+                  "converged": r.converged, "wssse": r.wssse_history,
+                  "cnt": list(r.sizes.values())}],
                 schema=out_schema,
             )
 
@@ -632,34 +624,6 @@ def kmeans_arrow(
             -(-n_points // 100_000),  # ceil div
         ),
     )
-    pts = base.coalesce(target).cache()
-    centroids = _init_random(pts, k, seed)
-    dim = len(centroids[0])
-
-    if n_points * dim * 8 <= local_bytes:
-        # Stats overestimated (or degenerate-init retry) but the dense
-        # matrix does fit one task: run the loop where the data is.
-        c0 = [list(c) for c in centroids]
-
-        def run_single(rows_iter, _c0=c0, _mi=max_iter, _tol=tol):
-            import numpy as _np
-
-            block = [r["vec"] for r in rows_iter]
-            if block:
-                yield _lloyd_single(
-                    _np.asarray(block, dtype=_np.float64),
-                    _np.asarray(_c0, dtype=_np.float64),
-                    _mi,
-                    _tol,
-                )
-
-        out = pts.coalesce(1).rdd.mapPartitions(run_single).collect()
-        pts.unpersist()
-        final_c, it, converged, wssse_history, cnt_list = out[0]
-        return KMeansResult(
-            final_c, it, converged, wssse_history,
-            {cid: n for cid, n in enumerate(cnt_list)},
-        )
 
     # Materialize each partition ONCE as a dense numpy block and cache the
     # block RDD. Every iteration is then a single treeAggregate over cached
@@ -674,87 +638,23 @@ def kmeans_arrow(
         if block:
             yield np.asarray(block, dtype=np.float64)
 
+    def comb(a, b):
+        return a[0] + b[0], a[1] + b[1], a[2] + b[2]
+
+    def step(C):
+        zero = (np.zeros(len(C), dtype=np.int64), np.zeros_like(C), np.zeros(len(C)))
+        return blocks.treeAggregate(
+            zero, lambda acc, X: comb(acc, _lloyd_kernel(X, C)), comb, depth=2
+        )
+
+    pts = base.coalesce(target).cache()
     blocks = pts.rdd.mapPartitions(_to_block)
-    blocks.persist()
-    blocks.count()
-    pts.unpersist()  # the DataFrame cache is superseded by the block cache
-
-    wssse_history: list[float] = []
-    sizes: dict[int, int] = {}
-    converged = False
-    it = 0
-    for it in range(1, max_iter + 1):
-        C = np.asarray(centroids, dtype=np.float64)
-        kk = C.shape[0]
-
-        def seq(acc, X, _C=C):
-            cnt, sums, sd = acc
-            c, s, d = _lloyd_kernel(X, _C)
-            return cnt + c, sums + s, sd + d
-
-        def comb(a, b):
-            return a[0] + b[0], a[1] + b[1], a[2] + b[2]
-
-        zero = (
-            np.zeros(kk, dtype=np.int64),
-            np.zeros((kk, dim), dtype=np.float64),
-            np.zeros(kk, dtype=np.float64),
-        )
-        cnt, sums, sd = blocks.treeAggregate(zero, seq, comb, depth=2)
-
-        wssse_history.append(float(sd.sum()))
-        new_centroids = list(centroids)
-        sizes = {cid: 0 for cid in range(k)}
-        for cid in range(k):
-            if cnt[cid] > 0:
-                new_centroids[cid] = (sums[cid] / cnt[cid]).tolist()
-                sizes[cid] = int(cnt[cid])
-        shift = max(
-            math.sqrt(sum((a - b2) ** 2 for a, b2 in zip(old, new)))
-            for old, new in zip(centroids, new_centroids)
-        )
-        centroids = new_centroids
-        if shift < tol:
-            converged = True
-            break
-    blocks.unpersist()
-    return KMeansResult(centroids, it, converged, wssse_history, sizes)
-
-
-def assign_clusters_broadcast(
-    spark: SparkSession,
-    df: DataFrame,
-    centroids: list[list[float]],
-    vec_col: str = "vec",
-) -> DataFrame:
-    """assign_clusters for large k·dim: broadcast-join + argmin window
-    instead of a compiled literal array.
-
-    The literal-array form (assign_clusters) bakes k·dim doubles into the
-    generated code — unbeatable for k·dim ≤ ~64k values, but codegen size
-    grows linearly and eventually falls back to interpretation. This
-    variant ships the full centroid list as ONE broadcast row holding an
-    ARRAY<ARRAY<DOUBLE>>: points pick it up via a 1-row
-    BroadcastNestedLoopJoin (no row fan-out, no shuffle), and the per-point
-    argmin is an array higher-order expression over the k candidate
-    vectors. This is literally the reference's op #7 (centroids shipped to
-    every mapper in the RPC request, /root/reference/master.py:182-186) in
-    plan form, minus the k-fold row explosion.
-
-    Same contract as assign_clusters: adds cid/dist2, ties break toward the
-    lowest cid (array_position returns the FIRST index of the min). Fully
-    deterministic — no per-row ids, no self-join, so retried tasks or
-    reshuffled inputs cannot diverge between plan branches.
-    """
-    cents = spark.createDataFrame(
-        [([list(map(float, vec)) for vec in centroids],)],
-        "cvecs ARRAY<ARRAY<DOUBLE>>",
-    )
-    dists = F.transform(F.col("cvecs"), lambda c: sq_euclidean(F.col(vec_col), c))
-    return (
-        df.join(F.broadcast(cents))
-        .withColumn("_d", dists)
-        .withColumn("dist2", F.array_min("_d"))
-        .withColumn("cid", (F.array_position(F.col("_d"), F.col("dist2")) - 1).cast("int"))
-        .drop("cvecs", "_d")
-    )
+    try:
+        centroids = _init_random(pts, k, seed)
+        blocks.persist()
+        blocks.count()
+        pts.unpersist()  # the DataFrame cache is superseded by the block cache
+        return _lloyd(step, centroids, max_iter, tol)
+    finally:
+        pts.unpersist()
+        blocks.unpersist()

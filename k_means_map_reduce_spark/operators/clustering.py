@@ -1,9 +1,14 @@
 """K-Means queries — the reference engine's query surface as driver entries.
 
-Both implementations are seeded ⇒ deterministic across runs, but the math is
-iterative/non-SQL, so these register rows-only (no oracle). Cross-checks
-(MLlib ≡ native on separable data, WSSSE monotonicity, reference 2-D parity)
-live in tests/test_kmeans.py.
+Every engine is seeded ⇒ deterministic across runs, but the loops are
+iterative and non-SQL, so no second engine replays their output.
+``kmeans_mllib_clusters``, ``kmeans_native_clusters`` and
+``kmeans_label_purity`` register rows-only. ``kmeans_mass_conservation`` and
+the arrow / streaming / k-means|| variants are oracled through invariants
+DuckDB recomputes from the base table (global mean, the k-means contract
+below); ``kmeans_lloyd_oracled`` and its kin replay a portable-init Lloyd
+loop as unrolled SQL. Engine cross-checks (MLlib ≡ native on separable data,
+WSSSE monotonicity, reference 2-D parity) live in tests/test_kmeans.py.
 """
 
 from __future__ import annotations
@@ -216,10 +221,13 @@ def _kmeans_contract_df(
 @query("kmeans_arrow_clusters", oracle=_KMEANS_CONTRACT_SQL)
 def kmeans_arrow_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow/BLAS Lloyd's loop (kmeans.kmeans_arrow — the scale path),
-    ORACLED via the k-means contract above: the executed path is the real
-    treeAggregate + BLAS iteration (matches kmeans_native to ~1e-9,
-    tested); the output is its invariant row. Cluster-level output shape
-    lives on in kmeans_mllib_clusters and the kmeans_arrow API itself."""
+    ORACLED via the k-means contract above; the output is its invariant
+    row. The embeddings table's plan estimate is far below
+    kmeans._LOCAL_BYTES at every test scale factor, so this runs the
+    one-task path (the whole loop in one executor task); the treeAggregate
+    path is checked against it in tests/test_kmeans.py. Both match
+    kmeans_native to ~1e-9 (tested). Cluster-level output shape lives on in
+    kmeans_mllib_clusters and the kmeans_arrow API itself."""
     from ..kmeans import kmeans_arrow
 
     e = load_table(spark, sf_dir, "embeddings")

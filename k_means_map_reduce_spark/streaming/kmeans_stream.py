@@ -24,7 +24,8 @@ consumed via ``readStream`` + ``maxFilesPerTrigger=1`` + ``availableNow``,
 so each file becomes one micro-batch. Per batch, assignment is the same
 broadcast-literal codegen argmin as batch K-Means (kmeans.assign_clusters —
 zero Python in the row path); the per-cluster (count, per-dim sum) aggregate
-collects k×(dim+1) numbers to the driver, which applies the update rule.
+is batch K-Means' own (kmeans._cluster_sums), collected to the driver, which
+applies the update rule.
 State never exceeds k·dim floats — no shuffle survives across batches.
 """
 
@@ -39,7 +40,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..kmeans import assign_clusters
+from ..kmeans import _cluster_sums, _init_random, assign_clusters
 
 
 @dataclass
@@ -86,25 +87,15 @@ def kmeans_streaming(
 
     ``df`` must be re-readable with a stable schema (it is re-written chunked
     to a temp dir that simulates arriving files). Initial centers default to
-    a seeded distinct sample (reference op #5 semantics).
+    batch K-Means' seeded distinct sample (kmeans._init_random, reference op
+    #5 semantics).
     """
     pts = df.select(
         F.col(id_col).alias("_id"), F.col(vec_col).cast("array<double>").alias("vec")
     ).where(F.col("vec").isNotNull() & (F.size("vec") > 0))
 
     if init_centers is None:
-        sample = pts.rdd.takeSample(False, 4 * k, seed=seed)
-        centers: list[list[float]] = []
-        seen: set[tuple] = set()
-        for r in sample:
-            key = tuple(r["vec"])
-            if key not in seen:
-                seen.add(key)
-                centers.append(list(r["vec"]))
-            if len(centers) == k:
-                break
-        if len(centers) < k:
-            raise ValueError(f"k={k} but fewer distinct points in init sample")
+        centers = _init_random(pts.select("vec"), k, seed)
     else:
         centers = [list(c) for c in init_centers]
         k = len(centers)
@@ -125,28 +116,22 @@ def kmeans_streaming(
         )
 
         def update(batch: DataFrame, _bid: int) -> None:
-            assigned = assign_clusters(batch, centers, "vec")
-            aggs = [F.count(F.lit(1)).alias("n")] + [
-                F.sum(F.element_at("vec", i + 1)).alias(f"s{i}")
-                for i in range(dim)
-            ]
-            rows = assigned.groupBy("cid").agg(*aggs).collect()
-            if not rows:
+            cnt, sums, _ = _cluster_sums(assign_clusters(batch, centers, "vec"), k, dim)
+            if not cnt.any():
                 return
             state["batches"] += 1
-            for r in rows:
-                cid, n = r["cid"], r["n"]
-                state["points"] += n
+            state["points"] += int(cnt.sum())
+            for cid in range(k):
                 w_old = weights[cid] * decay
-                w_new = w_old + n
+                if cnt[cid] == 0:
+                    weights[cid] = w_old  # empty cluster: decay weight, keep center
+                    continue
+                w_new = w_old + int(cnt[cid])
                 centers[cid] = [
-                    (centers[cid][i] * w_old + r[f"s{i}"]) / w_new
+                    (centers[cid][i] * w_old + float(sums[cid, i])) / w_new
                     for i in range(dim)
                 ]
                 weights[cid] = w_new
-            for cid in range(k):
-                if all(r["cid"] != cid for r in rows):
-                    weights[cid] *= decay  # empty cluster: decay weight, keep center
 
         q = (
             stream.writeStream.foreachBatch(update)

@@ -29,6 +29,7 @@ _SMOKE = {
     "test_exact_dedup_drops_duplicates",
     "test_pagerank_query_shape_and_determinism",
     "test_native_deterministic",
+    "test_arrow_single_task_equals_distributed",
     "test_zorder_write_roundtrip_lossless",
     "test_memo_evicts_lru_and_unpersists",
     "test_operator_caches_are_bounded_memos",

@@ -141,31 +141,70 @@ def test_kmeans_native_df_schema(spark, sf_dir):
 
 def test_arrow_equals_native(spark, sf_dir):
     """The Arrow/BLAS loop and the expression-tree loop implement the same
-    algorithm: same seeded init => same trajectory (to float-merge noise)."""
+    algorithm: same seeded init => same trajectory (to float-merge noise).
+    Two inputs: the parquet table (small plan estimate: arrow's one-task
+    path) and an in-memory single-partition copy of it (unknown plan
+    statistics: arrow's treeAggregate path)."""
     from k_means_map_reduce_spark.kmeans import kmeans_arrow
 
     e = load_table(spark, sf_dir, "embeddings")
-    a = kmeans_arrow(e, k=6, max_iter=8, tol=1e-6, seed=42)
-    n = kmeans_native(e, k=6, max_iter=8, tol=1e-6, seed=42)
-    assert a.iterations == n.iterations
-    diff = max(
-        abs(x - y) for ca, cn in zip(a.centers, n.centers) for x, y in zip(ca, cn)
-    )
-    assert diff < 1e-9, f"centers diverged by {diff}"
-    assert a.sizes == n.sizes
+    in_memory = spark.createDataFrame(e.collect(), e.schema).coalesce(1)
+    for df in (e, in_memory):
+        a = kmeans_arrow(df, k=6, max_iter=8, tol=1e-6, seed=42)
+        n = kmeans_native(df, k=6, max_iter=8, tol=1e-6, seed=42)
+        assert a.iterations == n.iterations
+        diff = max(
+            abs(x - y) for ca, cn in zip(a.centers, n.centers) for x, y in zip(ca, cn)
+        )
+        assert diff < 1e-9, f"centers diverged by {diff}"
+        assert a.sizes == n.sizes
+
+
+def test_arrow_degenerate_init_sample(spark, tmp_path):
+    """A small parquet input whose 4k-row init oversample holds fewer than
+    k distinct vectors: the one-task path defers to the treeAggregate path,
+    whose init falls back to a sample of the distinct vectors."""
+    from k_means_map_reduce_spark.kmeans import kmeans_arrow
+
+    rows = [([0.0, 0.0],)] * 1000 + [([5.0, 5.0],), ([9.0, 9.0],)]
+    path = str(tmp_path / "pts.parquet")
+    spark.createDataFrame(rows, "vec ARRAY<DOUBLE>").coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path)
+    sample = df.rdd.takeSample(False, 4 * 3, seed=42)
+    assert len({tuple(r["vec"]) for r in sample}) < 3  # the case under test
+    r = kmeans_arrow(df, vec_col="vec", k=3, max_iter=5, seed=42)
+    assert len({tuple(c) for c in r.centers}) == 3
+    assert sum(r.sizes.values()) == len(rows)
+
+
+@pytest.mark.parametrize("case", ["empty", "k_gt_distinct"])
+@pytest.mark.parametrize("engine", ["native", "arrow"])
+def test_failed_fit_releases_cached_input(spark, engine, case):
+    """A fit that raises (empty input, or k above the number of distinct
+    points) leaves no cached input pinned."""
+    from k_means_map_reduce_spark.kmeans import kmeans_arrow
+
+    fit = {"native": kmeans_native, "arrow": kmeans_arrow}[engine]
+    rows = [] if case == "empty" else [([0.0, 0.0],), ([1.0, 1.0],)] * 5
+    df = spark.createDataFrame(rows, "vec ARRAY<DOUBLE>")
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    with pytest.raises(ValueError):
+        fit(df, vec_col="vec", k=3, max_iter=5, seed=42)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
 
 
 def test_arrow_single_task_equals_distributed(spark, sf_dir, monkeypatch):
     """kmeans_arrow's two physical strategies — the one-job single-task loop
-    (small input) and the per-iteration treeAggregate loop (forced here via
-    SPARK_GRAFT_KMEANS_LOCAL_BYTES=0) — produce the same trajectory: the
+    (small input) and the per-iteration treeAggregate loop (forced here by
+    setting kmeans._LOCAL_BYTES to 0) — produce the same trajectory: the
     in-task replay of takeSample (split=0) must pick the identical seeded
-    init, and both paths share _lloyd_kernel."""
+    init, and both paths run _lloyd with _lloyd_kernel as the step."""
+    from k_means_map_reduce_spark import kmeans
     from k_means_map_reduce_spark.kmeans import kmeans_arrow
 
     e = load_table(spark, sf_dir, "embeddings")
     fast = kmeans_arrow(e, k=6, max_iter=8, tol=1e-6, seed=42)
-    monkeypatch.setenv("SPARK_GRAFT_KMEANS_LOCAL_BYTES", "0")
+    monkeypatch.setattr(kmeans, "_LOCAL_BYTES", 0)
     dist = kmeans_arrow(e, k=6, max_iter=8, tol=1e-6, seed=42)
     assert fast.iterations == dist.iterations
     assert fast.converged == dist.converged
@@ -210,30 +249,28 @@ def test_kmeans_parallel_init_recovers_blobs(spark):
     )
 
 
-def test_assign_broadcast_equals_literal(spark):
-    """The broadcast-join assignment (large-k path) must agree exactly with
-    the compiled-literal assignment, ties included."""
+def test_assign_ties_break_to_lowest_cid(spark):
+    """assign_clusters agrees with a Python argmin over (dist², cid), so
+    exact distance ties go to the lowest centroid id."""
     import random as _random
-
-    from k_means_map_reduce_spark.kmeans import (
-        assign_clusters,
-        assign_clusters_broadcast,
-    )
 
     rng = _random.Random(3)
     rows = [(i, [rng.uniform(-5, 5), rng.uniform(-5, 5)]) for i in range(300)]
     # a duplicated centroid pair forces dist2 ties → must break to lower cid
     cents = [[0.0, 0.0], [2.0, 2.0], [2.0, 2.0], [-3.0, 1.0]]
     df = spark.createDataFrame(rows, "vec_id BIGINT, vec ARRAY<DOUBLE>")
-    lit = {
+    got = {
         r["vec_id"]: (r["cid"], round(r["dist2"], 12))
         for r in assign_clusters(df, cents, "vec").collect()
     }
-    bc = {
-        r["vec_id"]: (r["cid"], round(r["dist2"], 12))
-        for r in assign_clusters_broadcast(spark, df, cents, "vec").collect()
-    }
-    assert lit == bc
+    want = {}
+    for i, v in rows:
+        d2, cid = min(
+            (sum((a - b) ** 2 for a, b in zip(v, c)), cid) for cid, c in enumerate(cents)
+        )
+        want[i] = (cid, round(d2, 12))
+    assert got == want
+    assert any(cid == 1 for cid, _ in got.values())
 
 
 def test_als_beats_mean_baseline_and_shape(spark, sf_dir):
