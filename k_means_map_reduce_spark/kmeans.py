@@ -24,7 +24,10 @@ seeded init.
    ---------------------------------------------- → ----------------------------
    ranged text scan, per-iter re-read
      (/root/reference/mapper.py:15-24,46)         → ``df.cache()`` once
-   random-sample init (master.py:54-65)           → seeded ``rdd.takeSample``
+   random-sample init (master.py:54-65)           → k distinct vectors of
+                                                    smallest seeded hash rank
+                                                    (``_rank``; same pick at
+                                                    any partition count)
    nearest-centroid map, broadcast cross-join +
      argmin (mapper.py:45-87)                     → centroid literal array +
                                                     ``array_sort`` argmin expr
@@ -170,28 +173,46 @@ def _lloyd(step, centroids, max_iter: int, tol: float) -> KMeansResult:
     return KMeansResult(C.tolist(), it, converged, wssse_history, sizes)
 
 
-def _init_random(pts: DataFrame, k: int, seed: int) -> list[list[float]]:
-    """Seeded uniform sample without replacement (reference op #5,
-    master.py:54-65) — the reference's random.sample, distributed and seeded.
-    Oversample 4x then keep the first k distinct vectors, avoiding a full
-    distinct() shuffle just for init."""
-    sample = pts.rdd.takeSample(False, 4 * k, seed=seed)
-    if not sample:
-        raise ValueError("empty input")
-    centroids: list[list[float]] = []
+def _rank(seed: int) -> Column:
+    """The one seeded draw behind every init pick: a 64-bit hash of
+    ``(seed, vec)`` per row. It depends only on the record, so a seed picks
+    the same rows however the input is partitioned, and equal vectors share
+    one rank."""
+    return F.xxhash64(F.lit(seed), F.col("vec"))
+
+
+def _first_distinct(vecs, k: int | None = None) -> list[list[float]]:
+    """The first ``k`` (default: all) distinct vectors of ``vecs``, in order."""
+    out: list[list[float]] = []
     seen = set()
-    for r in sample:
-        key = tuple(r["vec"])
+    for v in vecs:
+        key = tuple(v)
         if key not in seen:
             seen.add(key)
-            centroids.append(list(r["vec"]))
-        if len(centroids) == k:
-            break
+            out.append(list(v))
+            if len(out) == k:
+                break
+    return out
+
+
+def _init_random(pts: DataFrame, k: int, seed: int) -> list[list[float]]:
+    """Seeded sample of k distinct vectors (reference op #5,
+    master.py:54-65): the k with the smallest ``(_rank(seed), vec)``.
+    Copies of a vector share its rank, so every distinct vector is equally
+    likely however often it repeats (the reference samples lines). One
+    top-k job over the 4k lowest-rank rows usually holds k distinct
+    vectors; only when it does not does the pick pay for a ``distinct()``
+    shuffle."""
+    vecs, by_rank = pts.select("vec"), (_rank(seed), "vec")
+    rows = vecs.orderBy(*by_rank).limit(4 * k).collect()
+    if not rows:
+        raise ValueError("empty input")
+    centroids = _first_distinct((r["vec"] for r in rows), k)
     if len(centroids) < k:
-        distinct_sample = pts.distinct().rdd.takeSample(False, k, seed=seed)
-        if len(distinct_sample) < k:
-            raise ValueError(f"k={k} but only {len(distinct_sample)} distinct points")
-        centroids = [list(r["vec"]) for r in distinct_sample]
+        rows = vecs.distinct().orderBy(*by_rank).limit(k).collect()
+        centroids = [list(r["vec"]) for r in rows]
+    if len(centroids) < k:
+        raise ValueError(f"k={k} but only {len(centroids)} distinct points")
     return centroids
 
 
@@ -204,42 +225,35 @@ def _init_kmeans_parallel(
     then a driver-side weighted Lloyd on the O(ℓ·rounds) candidates.
 
     Each round is one distributed pass: assign_clusters (codegen argmin vs
-    the current candidate set) → φ via one agg → independent Bernoulli draws
-    with a seeded rand(). Candidate weights (how many points each candidate
-    owns) come from one final groupBy. Everything driver-side touches only
-    the ≤ ℓ·rounds+1 candidates, never the data. This is the init MLlib uses
-    by default, re-expressed in DataFrame ops — at 100 TB it replaces
-    k-means++'s k passes with ~5."""
+    the current candidate set) → φ via one agg → independent Bernoulli draws,
+    each the low 53 bits of a per-round ``_rank`` scaled to [0, 1). The
+    drawn rows are sorted by that rank on the driver, so the candidate order
+    does not depend on partitioning either. Candidate weights (how many
+    points each candidate owns) come from one final groupBy. Everything
+    driver-side touches only the ≤ ℓ·rounds+1 candidates, never the data.
+    This is the init MLlib uses by default, re-expressed in DataFrame ops —
+    at 100 TB it replaces k-means++'s k passes with ~5."""
     ell = oversample if oversample is not None else 2.0 * k
-    first = pts.rdd.takeSample(False, 1, seed=seed)
-    if not first:
-        raise ValueError("empty input")
-    candidates: list[list[float]] = [list(first[0]["vec"])]
+    candidates = _init_random(pts, 1, seed)
     for rnd in range(rounds):
         assigned = assign_clusters(pts, candidates, "vec")
         phi = assigned.agg(F.sum("dist2").alias("phi")).collect()[0]["phi"]
         if not phi or phi <= 0:  # all points coincide with candidates
             break
+        rank = _rank(seed + 1000 * (rnd + 1))
+        draw = rank.bitwiseAND(F.lit((1 << 53) - 1)) / F.lit(float(1 << 53))
         new = (
             assigned.where(
-                F.rand(seed + 1000 * (rnd + 1))
-                < F.least(F.lit(1.0), F.lit(ell) * F.col("dist2") / F.lit(phi))
+                draw < F.least(F.lit(1.0), F.lit(ell) * F.col("dist2") / F.lit(phi))
             )
-            .select("vec")
+            .select(rank.alias("rank"), "vec")
             .collect()
         )
-        seen = {tuple(c) for c in candidates}
-        for r in new:
-            key = tuple(r["vec"])
-            if key not in seen:
-                seen.add(key)
-                candidates.append(list(r["vec"]))
+        new.sort(key=lambda r: (r["rank"], r["vec"]))
+        candidates = _first_distinct(candidates + [r["vec"] for r in new])
     if len(candidates) <= k:
         # not enough candidates (tiny/degenerate input): pad with randoms
-        pad = _init_random(pts, k, seed)
-        seen = {tuple(c) for c in candidates}
-        candidates += [c for c in pad if tuple(c) not in seen]
-        return candidates[:k]
+        return _first_distinct(candidates + _init_random(pts, k, seed), k)
     # weight candidates by |points nearest to them|, then weighted Lloyd
     # driver-side on the small candidate set.
     wrows = (
@@ -257,11 +271,11 @@ def _init_kmeans_parallel(
 def _weighted_lloyd_local(
     xs: list[list[float]], ws: list[float], k: int, seed: int, iters: int = 30
 ) -> list[list[float]]:
-    """Weighted k-means++ seeding + weighted Lloyd's on the driver
-    (candidate set is O(k·rounds)). The ++ seeding is the part of the
-    k-means|| recipe that makes the local refine land one center per dense
-    region — seeding by raw weight alone can put two centers in one heavy
-    cluster and merge two others."""
+    """Weighted k-means++ seeding, then weighted Lloyd's through ``_lloyd``
+    on the driver (the candidate set is O(k·rounds)). The ++ seeding is the
+    part of the k-means|| recipe that makes the local refine land one center
+    per dense region — seeding by raw weight alone can put two centers in
+    one heavy cluster and merge two others."""
     import random as _random
 
     rng = _random.Random(seed)
@@ -289,32 +303,9 @@ def _weighted_lloyd_local(
         else:
             centers.append(list(xs[_weighted_draw(draw)]))
         d2 = [min(d, _sq(x, centers[-1])) for x, d in zip(xs, d2)]
-    dim = len(centers[0])
-    for _ in range(iters):
-        sums = [[0.0] * dim for _ in range(k)]
-        wsum = [0.0] * k
-        for x, w in zip(xs, ws):
-            b = min(
-                range(k),
-                key=lambda c: sum((a - b_) ** 2 for a, b_ in zip(x, centers[c])),
-            )
-            wsum[b] += w
-            for d in range(dim):
-                sums[b][d] += w * x[d]
-        new = [
-            [s / wsum[c] for s in sums[c]]
-            if wsum[c] > 0
-            else list(xs[rng.randrange(len(xs))])
-            for c in range(k)
-        ]
-        if all(
-            sum((a - b_) ** 2 for a, b_ in zip(o, n_)) < 1e-18
-            for o, n_ in zip(centers, new)
-        ):
-            centers = new
-            break
-        centers = new
-    return centers
+    X = np.asarray(xs, dtype=np.float64)
+    w = np.asarray(ws, dtype=np.float64)
+    return _lloyd(lambda C: _lloyd_kernel(X, C, w), centers, iters, 1e-9).centers
 
 
 def kmeans_native(
@@ -401,14 +392,16 @@ def kmeans_mllib(
     feats = df.select(
         array_to_vector(F.col(vec_col).cast("array<double>")).alias("features")
     ).cache()
-    model = KMeans(k=k, maxIter=max_iter, tol=tol, seed=seed).fit(feats)
-    # r13 optimization: the training summary already carries the per-cluster
-    # assignment counts (KMeansSummary.clusterSizes, indexed by cluster id),
-    # so the extra transform + groupBy + collect pass is pure recomputation
-    # of the same numbers (verified equal) — guide §1.2: don't compute
-    # things twice.
-    sizes = {cid: n for cid, n in enumerate(model.summary.clusterSizes)}
-    feats.unpersist()
+    try:
+        model = KMeans(k=k, maxIter=max_iter, tol=tol, seed=seed).fit(feats)
+        # r13 optimization: the training summary already carries the
+        # per-cluster assignment counts (KMeansSummary.clusterSizes, indexed
+        # by cluster id), so the extra transform + groupBy + collect pass is
+        # pure recomputation of the same numbers (verified equal) — guide
+        # §1.2: don't compute things twice.
+        sizes = {cid: n for cid, n in enumerate(model.summary.clusterSizes)}
+    finally:
+        feats.unpersist()
     spark = df.sparkSession
     rows = [
         (cid, int(sizes.get(cid, 0)), [float(x) for x in center])
@@ -417,56 +410,27 @@ def kmeans_mllib(
     return spark.createDataFrame(rows, "cluster_id INT, size BIGINT, center ARRAY<DOUBLE>")
 
 
-def _lloyd_kernel(X, C):
+def _lloyd_kernel(X, C, w=None):
     """One Lloyd assignment pass over a dense block: (cnt, Σvec, Σdist²).
 
     The step of both kmeans_arrow physical paths, so their math is
     identical: |x|²+|c|²-2XCᵀ distances (BLAS matmul), argmin with
     first-occurrence = lowest-cid tie-break, dist² clamped at 0 against fp
-    cancellation.
+    cancellation. ``w`` optionally weights each row (the k-means|| refine
+    weighs candidates by the points they own).
     """
     c_sq = (C * C).sum(axis=1)
     d2 = (X * X).sum(axis=1)[:, None] + c_sq[None, :] - 2.0 * (X @ C.T)
     cid = d2.argmin(axis=1)  # first occurrence = lowest cid on ties
     best = np.maximum(d2[np.arange(len(X)), cid], 0.0)
     kk = C.shape[0]
-    cnt = np.bincount(cid, minlength=kk)
+    cnt = np.bincount(cid, weights=w, minlength=kk)
+    if w is not None:
+        best, X = best * w, X * w[:, None]
     sd = np.bincount(cid, weights=best, minlength=kk)
     sums = np.zeros_like(C)
     np.add.at(sums, cid, X)
     return cnt, sums, sd
-
-
-def _take_sample_local(rows, num, seed):
-    """Bit-exact replica of ``RDD.takeSample(False, num, seed)`` for a
-    single-partition RDD, run in-task on the materialized row list.
-
-    Delegates to pyspark's own machinery (pyspark.core.rdd.RDD.takeSample +
-    pyspark.rddsampler.RDDSampler with split=0) so the one-job fast path of
-    kmeans_arrow picks the SAME seeded init the driver-side path would —
-    keeping trajectory parity with kmeans_native (test_arrow_equals_native).
-    """
-    import random as _random
-    import sys as _sys
-
-    from pyspark.core.rdd import RDD as _RDD
-    from pyspark.rddsampler import RDDSampler as _RDDSampler
-
-    initial_count = len(rows)
-    if num == 0 or initial_count == 0:
-        return []
-    rand = _random.Random(seed)
-    if num >= initial_count:
-        samples = list(rows)
-        rand.shuffle(samples)
-        return samples
-    fraction = _RDD._computeFractionForSampleSize(num, initial_count, False)
-    samples = list(_RDDSampler(False, fraction, seed).func(0, iter(rows)))
-    while len(samples) < num:
-        seed = rand.randint(0, _sys.maxsize)
-        samples = list(_RDDSampler(False, fraction, seed).func(0, iter(rows)))
-    rand.shuffle(samples)
-    return samples[0:num]
 
 
 # Dense inputs up to this many bytes (by plan statistics) run kmeans_arrow's
@@ -498,9 +462,8 @@ def kmeans_arrow(
       floor entirely. (Data never lands on the driver — this is mapInArrow,
       not collect; precedent: MLlib runs LocalKMeans for the k-means|| refine
       the same way, clustering/LocalKMeans.scala.)
-    - larger or unknown sizes, and inputs whose 4k-row init oversample holds
-      fewer than k distinct vectors: per-iteration treeAggregate over a
-      cached RDD of dense per-partition matrices:
+    - larger or unknown sizes: per-iteration treeAggregate over a cached
+      RDD of dense per-partition matrices:
 
         executors: cached numpy block → |x|²+|c|²-2XCᵀ argmin (BLAS)
                    → (count, Σvec, Σdist²) partials, tree-combined
@@ -514,8 +477,10 @@ def kmeans_arrow(
     own RDD loop shape (clustering/KMeans.scala: broadcast centers +
     treeAggregate over cached vector blocks), reproduced in numpy.
 
-    Both paths run ``_lloyd`` with ``_lloyd_kernel`` as the step, so they
-    agree to float-associativity (tested: test_arrow_equals_native).
+    Both paths pick the init ``_init_random`` picks (the k distinct vectors
+    with the smallest ``(_rank(seed), vec)``) and run ``_lloyd`` with
+    ``_lloyd_kernel`` as the step, so they agree to float-associativity
+    (tested: test_arrow_single_task_equals_distributed).
     """
     spark = df.sparkSession
     base = df.select(F.col(vec_col).cast("array<double>").alias("vec")).where(
@@ -534,82 +499,65 @@ def kmeans_arrow(
         est_bytes = None
 
     if est_bytes is not None and est_bytes <= _LOCAL_BYTES:
-        # ONE-JOB fast path: sample-init AND the full loop run inside a
-        # single executor task over the coalesced data. The init replays
-        # pyspark's own takeSample machinery at split=0, so the trajectory
-        # is identical to the driver-side init below. See docstring.
+        # ONE-JOB fast path: init AND the full loop run inside a single
+        # executor task over the coalesced data. Spark ranks every row
+        # before the coalesce; the task orders its rows by (rank, vec) and
+        # keeps the first k distinct, which is the pick _init_random makes
+        # on the driver. See docstring.
         #
         # The handoff is mapInArrow — vectors cross the JVM→Python boundary
-        # as Arrow list<double> batches instead of pickled Rows. Row ORDER
-        # is that of the single coalesced partition, and Arrow transports
-        # doubles exactly, so the seeded sample — and therefore the whole
-        # trajectory — matches the driver-side path (gated by
+        # as Arrow list<double> batches instead of pickled Rows, and Arrow
+        # transports doubles exactly (gated by
         # test_arrow_single_task_equals_distributed).
-        def run_all(batch_iter, _k=k, _mi=max_iter, _tol=tol, _seed=seed):
+        def run_all(batch_iter, _k=k, _mi=max_iter, _tol=tol):
             import pyarrow as _pa
 
-            out_schema = _pa.schema(
-                [
-                    ("status", _pa.string()),
-                    ("cents", _pa.list_(_pa.list_(_pa.float64()))),
-                    ("it", _pa.int32()),
-                    ("converged", _pa.bool_()),
-                    ("wssse", _pa.list_(_pa.float64())),
-                    ("cnt", _pa.list_(_pa.int64())),
-                ]
-            )
             batches = list(batch_iter)
             if sum(b.num_rows for b in batches) == 0:
                 return
             tbl = _pa.Table.from_batches(batches)
             vecs = tbl.column("vec").to_pylist()
-            sample = _take_sample_local(vecs, 4 * _k, _seed)
-            cents: list[list[float]] = []
-            seen: set = set()
-            for v in sample:
-                key = tuple(v)
-                if key not in seen:
-                    seen.add(key)
-                    cents.append(list(v))
-                if len(cents) == _k:
-                    break
-            if len(cents) < _k:
-                # <k distinct in the 4k oversample: defer to the general
-                # path, whose init falls back to a full distinct() sample.
-                yield _pa.RecordBatch.from_pylist(
-                    [{"status": "degenerate", "cents": None, "it": None,
-                      "converged": None, "wssse": None, "cnt": None}],
-                    schema=out_schema,
-                )
-                return
-            X = np.asarray(vecs, dtype=np.float64)
-            r = _lloyd(lambda C: _lloyd_kernel(X, C), cents, _mi, _tol)
+            by_rank = sorted(zip(tbl.column("rank").to_pylist(), vecs))
+            cents = _first_distinct((v for _, v in by_rank), _k)
+            if len(cents) < _k:  # too few distinct points: the driver raises
+                r = KMeansResult(cents, 0, False)
+            else:
+                X = np.asarray(vecs, dtype=np.float64)
+                r = _lloyd(lambda C: _lloyd_kernel(X, C), cents, _mi, _tol)
             yield _pa.RecordBatch.from_pylist(
-                [{"status": "ok", "cents": r.centers, "it": r.iterations,
+                [{"cents": r.centers, "it": r.iterations,
                   "converged": r.converged, "wssse": r.wssse_history,
                   "cnt": list(r.sizes.values())}],
-                schema=out_schema,
+                schema=_pa.schema(
+                    [
+                        ("cents", _pa.list_(_pa.list_(_pa.float64()))),
+                        ("it", _pa.int32()),
+                        ("converged", _pa.bool_()),
+                        ("wssse", _pa.list_(_pa.float64())),
+                        ("cnt", _pa.list_(_pa.int64())),
+                    ]
+                ),
             )
 
         out = (
-            base.coalesce(1)
+            base.withColumn("rank", _rank(seed))
+            .coalesce(1)
             .mapInArrow(
                 run_all,
-                "status string, cents array<array<double>>, it int, "
-                "converged boolean, wssse array<double>, cnt array<bigint>",
+                "cents array<array<double>>, it int, converged boolean, "
+                "wssse array<double>, cnt array<bigint>",
             )
             .collect()
         )
         if not out:
             raise ValueError("empty input")
-        if out[0]["status"] == "ok":
-            r = out[0]
-            return KMeansResult(
-                [list(c) for c in r["cents"]], r["it"], r["converged"],
-                list(r["wssse"]),
-                {cid: n for cid, n in enumerate(r["cnt"])},
-            )
-        # fall through: degenerate sample → general path below
+        r = out[0]
+        if len(r["cents"]) < k:
+            raise ValueError(f"k={k} but only {len(r['cents'])} distinct points")
+        return KMeansResult(
+            [list(c) for c in r["cents"]], r["it"], r["converged"],
+            list(r["wssse"]), {cid: n for cid, n in enumerate(r["cnt"])},
+        )
 
     # Right-size parallelism to the data: each iteration is one aggregation
     # job whose cost includes (Python worker round-trip) × partitions — 32

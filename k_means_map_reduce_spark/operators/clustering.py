@@ -558,7 +558,7 @@ def kmeans_lloyd_oracled(spark: SparkSession, sf_dir: str) -> DataFrame:
     map/shuffle/reduce loop) — made fully hash-comparable against an
     independent engine: deterministic portable init (the k=4 vectors with
     smallest salted-md5 vec_id, replacing the reference's random.sample /
-    our seeded takeSample, which no second engine can replay), sequential
+    our seeded xxhash64 rank, which no second engine can replay), sequential
     left-fold distances (identical double streams in both engines),
     argmin ties to the lowest cid, and DECIMAL-exact per-dimension mean
     updates so every round's centroids are bit-identical regardless of

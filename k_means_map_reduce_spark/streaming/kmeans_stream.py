@@ -87,8 +87,8 @@ def kmeans_streaming(
 
     ``df`` must be re-readable with a stable schema (it is re-written chunked
     to a temp dir that simulates arriving files). Initial centers default to
-    batch K-Means' seeded distinct sample (kmeans._init_random, reference op
-    #5 semantics).
+    batch K-Means' seeded init (kmeans._init_random: the k distinct vectors
+    of smallest seeded hash rank, reference op #5 semantics).
     """
     pts = df.select(
         F.col(id_col).alias("_id"), F.col(vec_col).cast("array<double>").alias("vec")

@@ -5,10 +5,15 @@ reference's input format (/root/reference/Data/Input/points.txt shape).
 
 from __future__ import annotations
 
+import json
 import math
+import os
 import random
+import subprocess
+import sys
 
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from k_means_map_reduce_spark.kmeans import (
@@ -66,10 +71,12 @@ def test_converged_fixed_point(spark, sf_dir):
 
 
 def test_blob_recovery_native_vs_mllib(spark):
-    """On well-separated blobs both implementations recover the true centers."""
+    """On well-separated blobs both implementations recover the true centers
+    from the same kind of init: k-means||, MLlib's default. (A uniform init
+    puts one seed in each of 4 equal blobs with probability about 10%.)"""
     true_centers = [[0.0, 0.0], [10.0, 0.0], [0.0, 10.0], [10.0, 10.0]]
     df = _blobs(spark, true_centers)
-    native = kmeans_native(df, vec_col="vec", k=4, max_iter=30, seed=42)
+    native = kmeans_native(df, vec_col="vec", k=4, max_iter=30, seed=42, init="k||")
     mllib_df = kmeans_mllib(df, vec_col="vec", k=4, max_iter=30, seed=42)
     mllib_centers = [r["center"] for r in mllib_df.collect()]
 
@@ -142,14 +149,14 @@ def test_kmeans_native_df_schema(spark, sf_dir):
 def test_arrow_equals_native(spark, sf_dir):
     """The Arrow/BLAS loop and the expression-tree loop implement the same
     algorithm: same seeded init => same trajectory (to float-merge noise).
-    Two inputs: the parquet table (small plan estimate: arrow's one-task
-    path) and an in-memory single-partition copy of it (unknown plan
-    statistics: arrow's treeAggregate path)."""
+    Three inputs: the parquet table and a 4-partition copy of it (small
+    plan estimate: arrow's one-task path), and an in-memory single-partition
+    copy of it (unknown plan statistics: arrow's treeAggregate path)."""
     from k_means_map_reduce_spark.kmeans import kmeans_arrow
 
     e = load_table(spark, sf_dir, "embeddings")
     in_memory = spark.createDataFrame(e.collect(), e.schema).coalesce(1)
-    for df in (e, in_memory):
+    for df in (e, e.repartition(4), in_memory):
         a = kmeans_arrow(df, k=6, max_iter=8, tol=1e-6, seed=42)
         n = kmeans_native(df, k=6, max_iter=8, tol=1e-6, seed=42)
         assert a.iterations == n.iterations
@@ -160,35 +167,53 @@ def test_arrow_equals_native(spark, sf_dir):
         assert a.sizes == n.sizes
 
 
-def test_arrow_degenerate_init_sample(spark, tmp_path):
-    """A small parquet input whose 4k-row init oversample holds fewer than
-    k distinct vectors: the one-task path defers to the treeAggregate path,
-    whose init falls back to a sample of the distinct vectors."""
-    from k_means_map_reduce_spark.kmeans import kmeans_arrow
+def test_arrow_degenerate_init_sample(spark, tmp_path, monkeypatch):
+    """A small parquet input whose 4k lowest-rank rows hold fewer than k
+    distinct vectors (each vector repeats at least 4k times, so the lowest
+    4k rows are copies of one vector at any seed): the driver's init falls
+    back to ranking the distinct vectors, and the one-task path, which
+    ranks all rows in its task, picks the same init."""
+    from k_means_map_reduce_spark import kmeans
+    from k_means_map_reduce_spark.kmeans import _rank, kmeans_arrow
 
-    rows = [([0.0, 0.0],)] * 1000 + [([5.0, 5.0],), ([9.0, 9.0],)]
+    rows = [([0.0, 0.0],)] * 1000 + [([5.0, 5.0],)] * 12 + [([9.0, 9.0],)] * 12
     path = str(tmp_path / "pts.parquet")
     spark.createDataFrame(rows, "vec ARRAY<DOUBLE>").coalesce(1).write.parquet(path)
     df = spark.read.parquet(path)
-    sample = df.rdd.takeSample(False, 4 * 3, seed=42)
-    assert len({tuple(r["vec"]) for r in sample}) < 3  # the case under test
-    r = kmeans_arrow(df, vec_col="vec", k=3, max_iter=5, seed=42)
-    assert len({tuple(c) for c in r.centers}) == 3
-    assert sum(r.sizes.values()) == len(rows)
+    lowest = df.orderBy(_rank(42), "vec").limit(4 * 3).collect()
+    assert len({tuple(r["vec"]) for r in lowest}) < 3  # the case under test
+    fast = kmeans_arrow(df, vec_col="vec", k=3, max_iter=5, seed=42)
+    assert len({tuple(c) for c in fast.centers}) == 3
+    assert sum(fast.sizes.values()) == len(rows)
+    monkeypatch.setattr(kmeans, "_LOCAL_BYTES", 0)
+    dist = kmeans_arrow(df, vec_col="vec", k=3, max_iter=5, seed=42)
+    assert (fast.centers, fast.sizes, fast.iterations) == (
+        dist.centers, dist.sizes, dist.iterations
+    )
 
 
-@pytest.mark.parametrize("case", ["empty", "k_gt_distinct"])
-@pytest.mark.parametrize("engine", ["native", "arrow"])
+@pytest.mark.parametrize(
+    "engine, case",
+    [
+        ("native", "empty"),
+        ("native", "k_gt_distinct"),
+        ("arrow", "empty"),
+        ("arrow", "k_gt_distinct"),
+        ("mllib", "empty"),
+    ],
+)
 def test_failed_fit_releases_cached_input(spark, engine, case):
     """A fit that raises (empty input, or k above the number of distinct
     points) leaves no cached input pinned."""
     from k_means_map_reduce_spark.kmeans import kmeans_arrow
 
-    fit = {"native": kmeans_native, "arrow": kmeans_arrow}[engine]
+    fit = {"native": kmeans_native, "arrow": kmeans_arrow, "mllib": kmeans_mllib}[engine]
+    # MLlib's fit fails in the JVM
+    error = Py4JJavaError if engine == "mllib" else ValueError
     rows = [] if case == "empty" else [([0.0, 0.0],), ([1.0, 1.0],)] * 5
     df = spark.createDataFrame(rows, "vec ARRAY<DOUBLE>")
     before = spark.sparkContext._jsc.getPersistentRDDs().size()
-    with pytest.raises(ValueError):
+    with pytest.raises(error):
         fit(df, vec_col="vec", k=3, max_iter=5, seed=42)
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
 
@@ -197,8 +222,8 @@ def test_arrow_single_task_equals_distributed(spark, sf_dir, monkeypatch):
     """kmeans_arrow's two physical strategies — the one-job single-task loop
     (small input) and the per-iteration treeAggregate loop (forced here by
     setting kmeans._LOCAL_BYTES to 0) — produce the same trajectory: the
-    in-task replay of takeSample (split=0) must pick the identical seeded
-    init, and both paths run _lloyd with _lloyd_kernel as the step."""
+    task's (rank, vec) order must pick the init _init_random picks on the
+    driver, and both paths run _lloyd with _lloyd_kernel as the step."""
     from k_means_map_reduce_spark import kmeans
     from k_means_map_reduce_spark.kmeans import kmeans_arrow
 
@@ -217,8 +242,8 @@ def test_arrow_single_task_equals_distributed(spark, sf_dir, monkeypatch):
 
 def test_kmeans_parallel_init_recovers_blobs(spark):
     """k-means|| init + Lloyd recovers well-separated blobs exactly (one
-    center per blob), and its final WSSSE matches random-init's on the same
-    data (both find the global optimum here). Also deterministic per seed."""
+    center per blob), so its final WSSSE is the optimum and no higher than
+    random-init's on the same data. Also deterministic per seed."""
     import random as _random
 
     from k_means_map_reduce_spark.kmeans import kmeans_native
@@ -244,9 +269,93 @@ def test_kmeans_parallel_init_recovers_blobs(spark):
         ]
         assert len(near) == 1, (c, r1.centers)
     rr = kmeans_native(df, k=4, max_iter=25, tol=1e-9, seed=42, init="random")
-    assert abs(r1.wssse_history[-1] - rr.wssse_history[-1]) < 1e-6 * max(
-        1.0, rr.wssse_history[-1]
+    assert r1.wssse_history[-1] <= rr.wssse_history[-1] * (1 + 1e-6)
+
+
+# Fits one seed at each master in argv, restarting the SparkContext between
+# them, on a parquet input repartitioned to the master's parallelism, and
+# prints one JSON line of inits and fits per master.
+_PARTITIONS_SCRIPT = r"""
+import json, sys
+from pyspark.sql import SparkSession
+from k_means_map_reduce_spark import kmeans
+
+path, out = sys.argv[1], {}
+for master in sys.argv[2:]:
+    spark = (
+        SparkSession.builder.master(master)
+        .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
+        .appName("kmeans-partition-probe")
+        .getOrCreate()
     )
+    spark.sparkContext.setLogLevel("ERROR")
+    n = spark.sparkContext.defaultParallelism
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    df = spark.read.parquet(path).repartition(n)
+    pts = df.select("vec")
+    fits = {
+        "native_random": lambda: kmeans.kmeans_native(df, "vec", 4, 6, 1e-9, 42),
+        "native_kpar": lambda: kmeans.kmeans_native(df, "vec", 4, 6, 1e-9, 42, "k||", 3),
+        "arrow_one_task": lambda: kmeans.kmeans_arrow(df, "vec", 4, 6, 1e-9, 42),
+    }
+    res = {
+        "partitions": df.rdd.getNumPartitions(),
+        "init_random": kmeans._init_random(pts, 4, 42),
+        "init_kpar": kmeans._init_kmeans_parallel(pts, 4, 42, rounds=3),
+    }
+    for name, fit in fits.items():
+        r = fit()
+        res[name] = [r.centers, sorted(r.sizes.items()), r.iterations]
+    local_bytes, kmeans._LOCAL_BYTES = kmeans._LOCAL_BYTES, 0
+    r = kmeans.kmeans_arrow(df, "vec", 4, 6, 1e-9, 42)
+    kmeans._LOCAL_BYTES = local_bytes
+    res["arrow_distributed"] = [r.centers, sorted(r.sizes.items()), r.iterations]
+    out[master] = res
+    spark.stop()
+print("RESULT " + json.dumps(out))
+"""
+
+
+def test_seeded_fit_is_partition_independent(spark, tmp_path):
+    """One seed gives the same init and the same fit at local[1], local[4]
+    and local[32], each reading the input in as many partitions as it has
+    cores: native random init, native k-means||, and kmeans_arrow's
+    one-task and treeAggregate paths."""
+    rng = random.Random(5)
+    rows = [
+        ([cx + rng.gauss(0, 1.5), cy + rng.gauss(0, 1.5)],)
+        for cx, cy in [(0, 0), (6, 0), (0, 6), (6, 6)]
+        for _ in range(100)
+    ]
+    path = str(tmp_path / "pts.parquet")
+    spark.createDataFrame(rows, "vec ARRAY<DOUBLE>").coalesce(1).write.parquet(path)
+    masters = ["local[1]", "local[4]", "local[32]"]
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "PYTHONPATH": os.pathsep.join(
+        [root, os.environ.get("PYTHONPATH", "")]
+    )}  # the driver and its Python workers import the package
+    r = subprocess.run(
+        [sys.executable, "-c", _PARTITIONS_SCRIPT, path, *masters],
+        capture_output=True,
+        text=True,
+        timeout=600,
+        env=env,
+    )
+    lines = [ln for ln in r.stdout.splitlines() if ln.startswith("RESULT ")]
+    assert lines, (r.stdout[-2000:], r.stderr[-2000:])
+    out = json.loads(lines[0][len("RESULT "):])
+    assert [out[m]["partitions"] for m in masters] == [1, 4, 32]
+    want = out[masters[0]]
+    for m in masters[1:]:
+        got = out[m]
+        assert got["init_random"] == want["init_random"], m
+        assert got["init_kpar"] == want["init_kpar"], m
+        for fit in ("native_random", "native_kpar", "arrow_one_task", "arrow_distributed"):
+            (gc, gs, gi), (wc, ws, wi) = got[fit], want[fit]
+            assert (gs, gi) == (ws, wi), (m, fit)
+            diff = max(abs(x - y) for a, b in zip(gc, wc) for x, y in zip(a, b))
+            assert diff < 1e-9, (m, fit, diff)
 
 
 def test_assign_ties_break_to_lowest_cid(spark):
